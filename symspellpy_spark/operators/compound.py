@@ -7,10 +7,10 @@ token (split-error repair, symspellpy.py:702-735), and every split
 point of the token (merge-error repair, symspellpy.py:749-832) with
 bigram / Naive-Bayes rescoring.
 
-Spark shape: ALL inner lookups are hoisted into one set-at-a-time
-batch ``lookup_batch`` over the distinct strings of the whole corpus
-(tokens + merged pairs + split halves), pre-joined back to token rows;
-the only sequential piece — the left-to-right fold whose merge decision
+Relational shape: ALL inner lookups are hoisted into one set-at-a-time
+``lookup_batch_relational`` over the distinct strings of the whole
+corpus (tokens + merged pairs + split halves), pre-joined back to token
+rows; the only sequential piece — the left-to-right fold whose merge decision
 depends on the previous token's decision (``is_last_combi`` /
 ``suggestion_parts[-1]``) — runs per-document inside ``applyInPandas``.
 At 100 TB this means: the expensive fuzzy matching is one shared
@@ -29,8 +29,9 @@ every inner TOP lookup resolves inside the ``mapInPandas`` kernel with
 a cross-batch cache, so a document never leaves its partition (no
 token explode, no LUT joins, no groupBy shuffle). Tokenization stays
 JVM-side (``parse_words_expr``) for byte parity with the relational
-path. Above ``broadcast_vocab_limit`` (or for USER_PROVIDED distance)
-the relational staged-lookup shape below takes over automatically.
+path. Above ``BROADCAST_VOCAB_LIMIT`` terms or bigrams (or for
+USER_PROVIDED distance) the relational staged-lookup shape below takes
+over automatically.
 """
 
 from __future__ import annotations
@@ -51,8 +52,9 @@ from symspellpy_spark.functions.text import (
     case_transfer_similar_py,
     parse_words_expr,
 )
+from symspellpy_spark.operators import neighborhood
 from symspellpy_spark.operators.dictionary import SparkDictionary
-from symspellpy_spark.operators.lookup import lookup_batch
+from symspellpy_spark.operators.lookup import lookup_batch_relational
 from symspellpy_spark.operators.scoped_cache import persist_scoped
 
 __all__ = ["lookup_compound_batch"]
@@ -203,7 +205,6 @@ def lookup_compound_batch(
     doc_col: str = "doc_id",
     text_col: str = "text",
     strategy: str = "auto",
-    broadcast_vocab_limit: int = 1_000_000,
 ) -> DataFrame:
     """-> one row per document: (doc_id, term, distance, count, replacements)."""
     cfg = dictionary.config
@@ -220,11 +221,9 @@ def lookup_compound_batch(
         strategy != "relational"
         and algo
         in (DistanceAlgorithm.LEVENSHTEIN, DistanceAlgorithm.DAMERAU_OSA)
-        and dictionary.num_terms <= broadcast_vocab_limit
+        and neighborhood.fits_broadcast(dictionary)
     ):
-        bigram_bc, bigrams_fit = _bigram_broadcast(
-            docs.sparkSession, dictionary, broadcast_vocab_limit
-        )
+        bigram_bc, bigrams_fit = _bigram_broadcast(docs.sparkSession, dictionary)
         if bigrams_fit:
             return _compound_broadcast(
                 docs,
@@ -308,7 +307,7 @@ def lookup_compound_batch(
         F.col("query").isNotNull()
     )
 
-    lut = lookup_batch(
+    lut = lookup_batch_relational(
         all_strs,
         dictionary,
         Verbosity.TOP,
@@ -499,18 +498,19 @@ def lookup_compound_batch(
 _BIGRAM_CACHE: dict = {}
 
 
-def _bigram_broadcast(spark, dictionary: SparkDictionary, limit: int):
+def _bigram_broadcast(spark, dictionary: SparkDictionary):
     """-> ``(broadcast({bigram: count}) | None, fits)``.
 
-    ``fits=False`` means the bigram table exceeds ``limit`` rows and the
-    caller must use the relational strategy (joins against the
-    distributed bigram table) instead of a broadcast dict. The size
-    probe is ``limit(n+1).collect()`` — when it returns <= n rows that
-    IS the whole table, so no separate count job runs.
+    ``fits=False`` means the bigram table exceeds
+    ``BROADCAST_VOCAB_LIMIT`` rows and the caller must use the
+    relational strategy (joins against the distributed bigram table)
+    instead of a broadcast dict. The size probe is
+    ``limit(n+1).collect()`` — when it returns <= n rows that IS the
+    whole table, so no separate count job runs.
     """
     if dictionary.bigrams is None:
         return None, True
-    from symspellpy_spark.operators.neighborhood import cached_driver_value
+    limit = neighborhood.BROADCAST_VOCAB_LIMIT
 
     def build():
         rows = (
@@ -528,8 +528,8 @@ def _bigram_broadcast(spark, dictionary: SparkDictionary, limit: int):
         )
 
     # the limit is part of the key: a fits=False verdict probed at one
-    # limit must not answer for a caller that allows a larger one
-    (bc, fits), _ = cached_driver_value(
+    # limit must not answer under a larger one
+    (bc, fits), _ = neighborhood.cached_driver_value(
         _BIGRAM_CACHE, dictionary, (limit,), build
     )
     return bc, fits
@@ -573,11 +573,6 @@ def _compound_broadcast(
     the relational path's (Java and Python regex Unicode classes differ
     on edge characters).
     """
-    from symspellpy_spark.operators.neighborhood import (
-        fuzzy_index_broadcast,
-        worker_resolver,
-    )
-
     cfg = dictionary.config
     transpositions = cfg.distance_algorithm == DistanceAlgorithm.DAMERAU_OSA
     kernel = damerau_osa_batch if transpositions else levenshtein_batch
@@ -587,7 +582,9 @@ def _compound_broadcast(
     bigram_min = dictionary.bigram_count_min
     spark = docs.sparkSession
 
-    idx_bc, bc_token = fuzzy_index_broadcast(spark, dictionary, d_, p_)
+    idx_bc, bc_token = neighborhood.fuzzy_index_broadcast(
+        spark, dictionary, d_, p_
+    )
 
     prepped = docs.select(
         F.col(doc_col).alias("doc_id"),
@@ -610,7 +607,9 @@ def _compound_broadcast(
     max_ed = max_edit_distance
 
     def run(batches):
-        resolver = worker_resolver(idx_bc, bc_token, kernel, transpositions)
+        resolver = neighborhood.worker_resolver(
+            idx_bc, bc_token, kernel, transpositions
+        )
         words = resolver.words
         skey = (bc_token, max_ed)
         split_cache = _WORKER_SPLIT_STATE.get(skey)

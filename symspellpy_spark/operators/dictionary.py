@@ -156,12 +156,14 @@ class SparkDictionary:
 
     def delete_dictionary_entry(self, key: str) -> "SparkDictionary":
         """Reference D2 (symspellpy.py:258-282): drop a term from words
-        and from every delete bucket; max_length is recomputed lazily."""
+        and from every delete bucket; max_length and num_terms are
+        recomputed lazily."""
         return replace(
             self,
             words=self.words.where(F.col("term") != key),
             deletes=self.deletes.where(F.col("term") != key),
             _max_length=None,
+            _num_terms=None,
         )
 
     def with_bigrams(self, bigrams: DataFrame) -> "SparkDictionary":
@@ -189,8 +191,8 @@ class SparkDictionary:
     def num_terms(self) -> int:
         """Vocabulary size (cached). Gates the broadcast-collect fast
         paths: a web-scale vocabulary must not be collected to the
-        driver, so segmentation/lookup fall back to their relational
-        shapes above ``broadcast_vocab_limit``."""
+        driver, so lookup/compound/segmentation fall back to their
+        relational shapes above ``neighborhood.BROADCAST_VOCAB_LIMIT``."""
         if self._num_terms is None:
             self._num_terms = self.words.count()
         return self._num_terms

@@ -13,7 +13,27 @@ change the final ranked set; the two shortcut branches
 exactly the true edit distance for the pairs they can reach, so a
 uniform verify-with-kernel produces identical results.
 
-Plan shape (scale notes):
+``lookup_batch`` routes every call to one of two result-identical
+engines, chosen only from the distance kernel and the vocabulary size:
+
+- worker-local (built-in kernels, ``num_terms <=
+  BROADCAST_VOCAB_LIMIT``): the delete index is built once on the
+  driver and broadcast (operators/neighborhood.py); distinct queries
+  resolve inside one ``mapInPandas`` pass on the per-worker
+  :class:`TopResolver` that compound and segmentation share, cached
+  across batches and calls. Measured on 4 cores (TOP, d=2, syllable
+  dictionaries of 10k to 500k terms) it beat the warm relational
+  engine 6-23x at every size, on a Zipf query stream and on an
+  all-distinct one, so the rule needs no repeat-rate term. Its cost is
+  the driver-side index build on a dictionary's first call (linear in
+  the vocabulary: ~8 s at 80k terms, ~39 s at 500k), paid once per
+  dictionary and shared with compound and segmentation;
+- relational (:func:`lookup_batch_relational`): the delete-key join
+  below, for USER_PROVIDED kernels and vocabularies too big to
+  broadcast (including the bucketed index, ``broadcast_index=False``).
+  The relational shapes of compound and segmentation call it directly.
+
+Relational plan shape (scale notes):
 - queries are deduplicated first (at corpus scale many documents share
   tokens — lookup cost is per *distinct* token);
 - the delete-key join broadcasts the dictionary index by default (the
@@ -27,16 +47,29 @@ from __future__ import annotations
 
 from dataclasses import replace
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from symspellpy_spark.config import DistanceAlgorithm, EngineConfig, Verbosity
-from symspellpy_spark.functions.distance import distance_udf
-from symspellpy_spark.functions.text import case_transfer_similar_udf
+from symspellpy_spark.config import DistanceAlgorithm, Verbosity
+from symspellpy_spark.functions.distance import (
+    damerau_osa_batch,
+    distance_udf,
+    levenshtein_batch,
+)
+from symspellpy_spark.functions.text import (
+    case_transfer_similar_py,
+    case_transfer_similar_udf,
+)
 from symspellpy_spark.operators.deletes import delete_neighborhood
 from symspellpy_spark.operators.dictionary import SparkDictionary
+from symspellpy_spark.operators.neighborhood import (
+    fits_broadcast,
+    fuzzy_index_broadcast,
+    worker_resolver,
+)
 from symspellpy_spark.operators.scoped_cache import persist_scoped
 
-__all__ = ["lookup_batch"]
+__all__ = ["lookup_batch", "lookup_batch_relational"]
 
 
 def lookup_batch(
@@ -48,12 +81,175 @@ def lookup_batch(
     ignore_pattern: str | None = None,
     transfer_casing: bool = False,
     query_col: str = "query",
-    broadcast_index: bool = True,
 ) -> DataFrame:
     """Fuzzy-match every (distinct) query against the dictionary.
 
     Returns ``(query, term, distance, count)`` — ``query`` is the
     caller's original string; ``term`` the suggested dictionary term.
+    """
+    cfg = dictionary.config
+    if max_edit_distance is None:
+        max_edit_distance = cfg.max_dictionary_edit_distance
+    if max_edit_distance > cfg.max_dictionary_edit_distance:
+        raise ValueError("Distance too large")
+    if cfg.distance_algorithm in (
+        DistanceAlgorithm.LEVENSHTEIN,
+        DistanceAlgorithm.DAMERAU_OSA,
+    ) and fits_broadcast(dictionary):
+        return _lookup_local(
+            queries,
+            dictionary,
+            verbosity,
+            max_edit_distance,
+            include_unknown,
+            ignore_pattern,
+            transfer_casing,
+            query_col,
+        )
+    return lookup_batch_relational(
+        queries,
+        dictionary,
+        verbosity,
+        max_edit_distance,
+        include_unknown,
+        ignore_pattern,
+        transfer_casing,
+        query_col,
+    )
+
+
+def _lookup_local(
+    queries: DataFrame,
+    dictionary: SparkDictionary,
+    verbosity: Verbosity,
+    max_edit_distance: int,
+    include_unknown: bool,
+    ignore_pattern: str | None,
+    transfer_casing: bool,
+    query_col: str,
+) -> DataFrame:
+    """The worker-local engine: one ``mapInPandas`` pass over the
+    queries, hash-partitioned so each distinct query is answered once.
+
+    Lower-casing and the ignore-pattern test run JVM-side, with the
+    relational engine's expressions (Java and Python regex and case
+    mapping differ on edge characters). TOP reads the resolver's TOP
+    mode; CLOSEST and ALL cut its all-matches lists here, then the
+    ignore short-circuit, the ALL one-char quirk, ``transfer_casing``
+    and ``include_unknown`` apply as in the relational engine.
+    """
+    cfg = dictionary.config
+    transpositions = cfg.distance_algorithm == DistanceAlgorithm.DAMERAU_OSA
+    kernel = damerau_osa_batch if transpositions else levenshtein_batch
+    d = max_edit_distance
+    spark = queries.sparkSession
+    idx_bc, token = fuzzy_index_broadcast(
+        spark, dictionary, d, cfg.prefix_length
+    )
+
+    q = queries.select(F.col(query_col).alias("query")).where(
+        F.col("query").isNotNull()
+    )
+    phrase = F.lower(F.col("query")) if transfer_casing else F.col("query")
+    q = q.select("query", phrase.alias("phrase"))
+    ignored = (
+        F.col("phrase").rlike(f"^(?:{ignore_pattern})")
+        if ignore_pattern is not None
+        else F.lit(False)
+    )
+    # a fixed partition count (never coalesced by AQE) keeps the
+    # compute-bound kernel on every core, and hash routing puts all
+    # copies of a query in one partition, so a per-task seen-set is a
+    # global distinct
+    para = spark.sparkContext.defaultParallelism
+    q = q.select("query", "phrase", ignored.alias("ignored")).repartition(
+        para * 2, "query"
+    )
+    closest = verbosity == Verbosity.CLOSEST
+
+    def run(batches):
+        resolver = worker_resolver(idx_bc, token, kernel, transpositions)
+        words = resolver.words
+        one_char = (
+            [t for t in words if len(t) == 1] if verbosity == Verbosity.ALL else []
+        )
+        seen: set = set()
+        for pdf in batches:
+            fresh = []
+            for row in zip(pdf["query"], pdf["phrase"], pdf["ignored"]):
+                if row[0] not in seen:
+                    seen.add(row[0])
+                    fresh.append(row)
+            # an ignored phrase off the vocabulary answers itself
+            # outside ALL (exact hits win, symspellpy.py:413-428)
+            short_cut = {
+                p for _, p, ign in fresh
+                if ign and verbosity != Verbosity.ALL and p not in words
+            }
+            todo = {p for _, p, _ in fresh} - short_cut
+            if verbosity == Verbosity.TOP:
+                resolver.prepare(todo)
+            else:
+                resolver.prepare_matches(todo, closest)
+            rows = []
+            for query, p, ign in fresh:
+                if p in short_cut:
+                    hits = [(p, 0, 1)]
+                elif verbosity == Verbosity.TOP:
+                    top = resolver.get(p)
+                    hits = [top] if top is not None else []
+                else:
+                    hits = resolver.matches(p, closest)
+                    if closest and hits:
+                        mind = min(h[1] for h in hits)
+                        hits = [h for h in hits if h[1] == mind]
+                    elif verbosity == Verbosity.ALL:
+                        # the one-char duplicate quirk (see the relational
+                        # engine) and the ignore row, which under ALL
+                        # keeps the fuzzy results
+                        hits = list(hits)
+                        if len(p) <= d:
+                            hits += [
+                                (t, len(p), words[t])
+                                for t in one_char
+                                if t in p and t != p
+                            ]
+                        if ign:
+                            hits.append((p, 0, 1))
+                if transfer_casing:
+                    hits = [
+                        (case_transfer_similar_py(query, t), dist, c)
+                        for t, dist, c in hits
+                    ]
+                if not hits and include_unknown:
+                    hits = [(p, d + 1, 0)]
+                rows.extend((query, t, dist, c) for t, dist, c in hits)
+            yield pd.DataFrame(
+                rows, columns=["query", "term", "distance", "count"]
+            )
+
+    return q.mapInPandas(
+        run, schema="query string, term string, distance int, count long"
+    )
+
+
+def lookup_batch_relational(
+    queries: DataFrame,
+    dictionary: SparkDictionary,
+    verbosity: Verbosity = Verbosity.TOP,
+    max_edit_distance: int | None = None,
+    include_unknown: bool = False,
+    ignore_pattern: str | None = None,
+    transfer_casing: bool = False,
+    query_col: str = "query",
+    broadcast_index: bool = True,
+) -> DataFrame:
+    """The relational engine: delete-key join -> verify -> verbosity
+    ranks, same contract as :func:`lookup_batch`.
+
+    ``broadcast_index=False`` leaves the join strategy to AQE — the
+    plan for a bucketed index (``SparkDictionary.save_bucketed``) too
+    big to broadcast.
     """
     cfg = dictionary.config
     if max_edit_distance is None:

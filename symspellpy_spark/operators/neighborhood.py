@@ -1,20 +1,21 @@
 """Broadcastable vectorized delete-neighborhood index.
 
-The worker-local fuzzy kernels (``segmentation.py``,
-``local_lookup.py``) resolve out-of-vocabulary queries with the
-symmetric-delete trick (reference symspellpy.py:1038-1068): a query
-matches a term at OSA distance <= d only if they share a bounded-depth
-delete key. Round 2 built those delete indexes as Python dicts INSIDE
-each python worker from a broadcast ``{term: count}`` map — correct,
-but the build costs ~5 s for the 82k EN dictionary at d=2 and is paid
-once per worker process (x32 locally, x thousands on a cluster), which
-dominates small-batch jobs.
+The worker-local SymSpell kernels (``lookup.py``, ``compound.py``,
+``segmentation.py``) resolve queries with the symmetric-delete trick
+(reference symspellpy.py:1038-1068): a query matches a term at OSA
+distance <= d only if they share a bounded-depth delete key. Round 2
+built those delete indexes as Python dicts INSIDE each python worker
+from a broadcast ``{term: count}`` map — correct, but the build costs
+~5 s for the 82k EN dictionary at d=2 and is paid once per worker
+process (x32 locally, x thousands on a cluster), which dominates
+small-batch jobs.
 
 This module builds the index ONCE on the driver as flat numpy arrays
 (sorted key-hash array + aligned term ids — a static CSR adjacency),
 which broadcast-deserialize at memcpy speed, and resolves candidate
 sets for a whole query batch with vectorized searchsorted instead of
-per-query dict probes.
+per-query dict probes. :class:`TopResolver` is the one worker-side
+resolver over it, shared per worker by every operator.
 
 Keys are hashed with a fixed-width vectorized FNV-1a over zero-padded
 utf-8 bytes (`pack_keys`). Equal keys always hash equal; a collision
@@ -23,23 +24,24 @@ always follows filters out — so hashing never changes results.
 
 Scale note: the driver-side build is a Python loop over the vocabulary
 (~7 s at 82k terms, linear in vocab size). Callers gate on
-``broadcast_vocab_limit`` (default 1M terms) and fall back to the
-relational delete-join path above it, so the driver never builds an
-index for a web-scale vocabulary.
+:func:`fits_broadcast` (``BROADCAST_VOCAB_LIMIT`` terms) and fall back
+to their relational delete-join shapes above it, so the driver never
+builds an index for a web-scale vocabulary.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
 
 __all__ = [
+    "BROADCAST_VOCAB_LIMIT",
     "FuzzyIndex",
     "TopResolver",
     "build_fuzzy_index",
     "delete_neighborhood_py",
+    "fits_broadcast",
     "fuzzy_index_broadcast",
     "grouped_arange",
     "pack_keys",
@@ -371,9 +373,10 @@ def build_fuzzy_index(words: dict, d: int, p: int) -> FuzzyIndex:
     order = sorted(range(n_t), key=lambda i: (-counts[i], terms[i]))
     rank[np.asarray(order, dtype=np.int64)] = np.arange(n_t)
 
+    # d = 0 is a membership probe on ``terms``: no delete keys at all
     k1 = []
     t1 = []
-    for tid, t in enumerate(terms):
+    for tid, t in enumerate(terms if d >= 1 else ()):
         k1.append(t)
         t1.append(tid)
         for i in range(len(t)):
@@ -454,14 +457,6 @@ _RESOLVER_CACHE_CAP = 4_000_000
 # int16 rows per chunk keep the transient diff matrix ~100 MB
 _BAG_CHUNK = 2_000_000
 
-# A/B measurement hook (jobs/ab_bag_prefilter.py): the bag prefilter is
-# a pure prune of provably-non-matching pairs — results are identical
-# either way (test_top_resolver_matches_bruteforce) — so this toggle
-# exists only to measure the prefilter's payoff, never to change
-# semantics. Read at worker import time; local mode inherits the
-# launching process's environment.
-_BAG_PREFILTER = os.environ.get("SGRAFT_BAG_PREFILTER", "1") != "0"
-
 
 def char_bags(strings, cap: int) -> np.ndarray:
     """(n, 27) int16 character-bag signatures: counts per bucket
@@ -491,23 +486,33 @@ def char_bags(strings, cap: int) -> np.ndarray:
 
 
 class TopResolver:
-    """Worker-side TOP lookup over a deserialized :class:`FuzzyIndex`.
+    """Worker-side lookup over a deserialized :class:`FuzzyIndex` — the
+    one delete-neighbourhood resolver behind ``lookup_batch``,
+    ``lookup_compound_batch`` and ``word_segmentation_batch``.
 
-    ``get(q)`` returns the reference's ``lookup(q, TOP, d)`` winner as
-    ``(term, distance, count)`` or ``None`` — exact-hit short-circuit,
-    optional ignore-pattern injection (``(q, 0, 1)``), the
-    ``len(q) - d > max_len`` early exit, and the (distance ASC, count
-    DESC, term ASC) tie-break (reference symspellpy.py:358-637 TOP
-    semantics; shared by the fuzzy segmentation and compound kernels).
+    TOP mode: ``get(q)`` returns the reference's ``lookup(q, TOP, d)``
+    winner as ``(term, distance, count)`` or ``None`` — exact-hit
+    short-circuit, optional ignore-pattern injection (``(q, 0, 1)``),
+    the ``len(q) - d > max_len`` early exit, and the (distance ASC,
+    count DESC, term ASC) tie-break (reference symspellpy.py:358-637
+    TOP semantics).
 
-    ``prepare(queries)`` resolves a whole batch in two vectorized
-    stages: a d<=1 pass over the full-single-delete index (any OSA-d1
-    pair shares a full single delete; candidates arrive pre-sorted by
-    (-count, term), so the first ``within_one`` survivor IS the TOP —
-    and at d>=2 it is still final, since any deep match carries
-    distance >= 2), then for d1 misses a deep prefix-neighborhood pass
-    with ONE distance-kernel call for all (query, candidate) pairs and
-    a lexsort argmin replaying the tie-break. Resolutions are cached
+    All-matches mode: ``matches(q, closest)`` returns every term within
+    ``d`` as ``[(term, distance, count), ...]``, the input of
+    ``lookup_batch``'s CLOSEST and ALL cuts (``ign_pat`` plays no part
+    here; the caller applies it).
+
+    Both modes resolve a whole batch (``prepare`` /
+    ``prepare_matches``) in the same two vectorized passes: a d<=1
+    pass over the full-single-delete index (any OSA-d1 pair shares a
+    full single delete; candidates arrive pre-sorted by (-count,
+    term), so TOP's first ``within_one`` survivor is its answer), then
+    a deep prefix-neighborhood pass with a character-bag prefilter and
+    ONE distance-kernel call for all (query, candidate) pairs, sorted
+    into the tie-break order. The deep pass only runs for queries the
+    d<=1 pass left open: a TOP or CLOSEST hit at distance <= 1 cannot
+    be beaten by a deeper match (the relational staged join's rule);
+    ALL at d >= 2 takes the deep pass alone. Resolutions are cached
     across calls (python workers are reused)."""
 
     def __init__(self, index: FuzzyIndex, kernel, transpositions: bool,
@@ -518,12 +523,14 @@ class TopResolver:
         self.kernel = kernel
         self.transpositions = transpositions
         self.words = dict(zip(index.terms, index.counts.tolist()))
-        self.cache: dict = {}
+        self.cache: dict = {}  # TOP: q -> (term, dist, count) | None
+        self.near: dict = {}  # q -> every match at distance <= min(d, 1)
+        self.deep: dict = {}  # q -> every match at distance <= d (d >= 2)
         self.ign = re.compile(f"^(?:{ign_pat})") if ign_pat is not None else None
         self._term_bags: np.ndarray | None = None  # lazy: d>=2 only
 
     def prepare(self, queries) -> None:
-        """Resolve every uncached query of ``queries`` into the cache."""
+        """Resolve every uncached query of ``queries`` into the TOP cache."""
         index = self.index
         words = self.words
         cache = self.cache
@@ -541,12 +548,36 @@ class TopResolver:
                 cache[q] = (q, 0, c)
             elif ign is not None and ign.match(q):
                 cache[q] = (q, 0, 1)
-            elif len(q) - d > max_len:
+            elif d == 0 or len(q) - d > max_len:
                 cache[q] = None
             else:
                 qlist.append(q)
-        if qlist:
-            self._resolve_fuzzy(qlist)
+        if not qlist:
+            return
+        # exact hits never get here, so a d<=1 hit is at distance 1 and
+        # no deep match can beat it
+        qlens = _lens(qlist)
+        miss: list = []
+        for qi, hits in enumerate(self._near_pass(qlist, qlens, True)):
+            if hits:
+                cache[qlist[qi]] = hits[0]
+            elif d == 1:
+                cache[qlist[qi]] = None
+            else:
+                miss.append(qi)
+        if not miss:
+            return
+        mq = [qlist[i] for i in miss]
+        fmi, ftid, fd = self._deep_pass(mq, qlens[np.asarray(miss)])
+        first = np.ones(len(fmi), dtype=bool)
+        first[1:] = fmi[1:] != fmi[:-1]
+        res: dict = {}
+        terms = index.terms
+        for i in np.flatnonzero(first):
+            t = terms[ftid[i]]
+            res[int(fmi[i])] = (t, int(fd[i]), words[t])
+        for mi, q in enumerate(mq):
+            cache[q] = res.get(mi)
 
     def get(self, q):
         """Cached TOP resolution; resolves synchronously on a miss."""
@@ -557,38 +588,94 @@ class TopResolver:
             r = self.cache[q]
         return r
 
-    def _resolve_fuzzy(self, qlist: list) -> None:
-        index = self.index
+    def prepare_matches(self, queries, closest: bool) -> None:
+        """Resolve the match lists ``matches(q, closest)`` reads for
+        every query of ``queries``."""
+        d = self.index.d
+        near, deep = self.near, self.deep
+        if len(near) + len(deep) > _RESOLVER_CACHE_CAP:
+            near.clear()
+            deep.clear()
+        queries = set(queries)
+        if d <= 1 or closest:
+            todo = self._uncached(near, queries)
+            if todo:
+                hits = self._near_pass(todo, _lens(todo), False)
+                near.update(zip(todo, hits))
+        if d >= 2:
+            todo = self._uncached(
+                deep, (q for q in queries if not (closest and near[q]))
+            )
+            if todo:
+                fmi, ftid, fd = self._deep_pass(todo, _lens(todo))
+                bounds = np.searchsorted(fmi, np.arange(len(todo) + 1))
+                terms = self.index.terms
+                words = self.words
+                for i, q in enumerate(todo):
+                    deep[q] = [
+                        (terms[ftid[k]], int(fd[k]), words[terms[ftid[k]]])
+                        for k in range(bounds[i], bounds[i + 1])
+                    ]
+
+    def matches(self, q, closest: bool) -> list:
+        """Every match of ``q`` within d — or, with ``closest``, at
+        least every match at its minimal distance. Call
+        ``prepare_matches`` with the same ``closest`` first."""
+        if self.index.d <= 1 or (closest and self.near[q]):
+            return self.near[q]
+        return self.deep[q]
+
+    def _uncached(self, cache: dict, queries) -> list:
+        """Queries missing from ``cache`` that need a search; the
+        trivially answered ones (d = 0 membership, the ``len(q) - d >
+        max_len`` early exit) are stored directly."""
         words = self.words
-        cache = self.cache
-        terms = index.terms
-        rank = index.rank
-        d = index.d
+        d = self.index.d
+        max_len = self.index.max_len
+        todo: list = []
+        for q in queries:
+            if q in cache:
+                continue
+            if d == 0:
+                c = words.get(q)
+                cache[q] = [(q, 0, c)] if c is not None else []
+            elif len(q) - d > max_len:
+                cache[q] = []
+            else:
+                todo.append(q)
+        return todo
+
+    def _near_pass(self, qlist: list, qlens: np.ndarray, first_only: bool):
+        """-> per query, its matches at distance <= 1 in (-count, term)
+        order (only the first with ``first_only``)."""
+        terms = self.index.terms
+        words = self.words
         transpositions = self.transpositions
-        nq = len(qlist)
-        qlens = np.fromiter((len(q) for q in qlist), dtype=np.int64, count=nq)
-        _, utid, bounds = index.d1_groups(qlist, qlens)
-        miss: list = []
-        for qi in range(nq):
-            q = qlist[qi]
-            hit = None
+        _, utid, bounds = self.index.d1_groups(qlist, qlens)
+        out = []
+        for qi, q in enumerate(qlist):
+            hits = []
             for k in range(bounds[qi], bounds[qi + 1]):
                 t = terms[utid[k]]
-                if within_one(q, t, transpositions):
-                    hit = (t, 1, words[t])
+                if t == q:
+                    hits.append((t, 0, words[t]))
+                elif within_one(q, t, transpositions):
+                    hits.append((t, 1, words[t]))
+                else:
+                    continue
+                if first_only:
                     break
-            if hit is not None:
-                cache[q] = hit
-            elif d == 1:
-                cache[q] = None
-            else:
-                miss.append(qi)
-        if not miss:
-            return
-        mq = [qlist[i] for i in miss]
-        mlens = qlens[np.asarray(miss, dtype=np.int64)]
+            out.append(hits)
+        return out
+
+    def _deep_pass(self, mq: list, mlens: np.ndarray):
+        """-> ``(query idx, term id, distance)`` of every depth-d
+        candidate pair of ``mq`` that verifies within d, sorted by
+        (query, distance, rank) — the reference tie-break order."""
+        index = self.index
+        d = index.d
         pair_mi, pair_tid = index.deep_pairs(mq, mlens)
-        if len(pair_mi) > 0 and _BAG_PREFILTER:
+        if len(pair_mi) > 0:
             # character-bag lower-bound prefilter (see char_bags): on the
             # d=2 segmentation workload it prunes ~59% of deep pairs
             # before the DP kernel for ~5% of the kernel's cost. Term
@@ -596,41 +683,36 @@ class TopResolver:
             # query bags are per-batch. Chunked so the (pairs x 27) diff
             # stays ~100 MB.
             if self._term_bags is None:
-                self._term_bags = char_bags(terms, index.max_len)
-            qb = char_bags(mq, int(mlens.max()) if len(mq) else 1)
+                self._term_bags = char_bags(index.terms, index.max_len)
+            qb = char_bags(mq, int(mlens.max()))
             tb = self._term_bags
-            bound = 2 * d
             keep = np.empty(len(pair_mi), dtype=bool)
             for s in range(0, len(pair_mi), _BAG_CHUNK):
                 e = min(s + _BAG_CHUNK, len(pair_mi))
                 diff = np.abs(
                     qb[pair_mi[s:e]] - tb[pair_tid[s:e]]
                 ).sum(axis=1)
-                keep[s:e] = diff <= bound
+                keep[s:e] = diff <= 2 * d
             pair_mi, pair_tid = pair_mi[keep], pair_tid[keep]
         if len(pair_mi) == 0:
-            for qi in miss:
-                cache[qlist[qi]] = None
-            return
+            empty = np.empty(0, dtype=np.int64)
+            return empty, empty, empty
         import pandas as pd
 
         pq = pd.Series([mq[i] for i in pair_mi], dtype=object)
-        pt = pd.Series([terms[i] for i in pair_tid], dtype=object)
+        pt = pd.Series([index.terms[i] for i in pair_tid], dtype=object)
         dists = self.kernel(pq, pt, d).to_numpy()
         ok = dists >= 0
         fmi = pair_mi[ok]
         ftid = pair_tid[ok]
         fd = dists[ok].astype(np.int64)
-        order = np.lexsort((rank[ftid], fd, fmi))
-        fmi, ftid, fd = fmi[order], ftid[order], fd[order]
-        first = np.ones(len(fmi), dtype=bool)
-        first[1:] = fmi[1:] != fmi[:-1]
-        res: dict = {}
-        for i in np.flatnonzero(first):
-            t = terms[ftid[i]]
-            res[int(fmi[i])] = (t, int(fd[i]), words[t])
-        for mi, qi in enumerate(miss):
-            cache[qlist[qi]] = res.get(mi)
+        order = np.lexsort((index.rank[ftid], fd, fmi))
+        return fmi[order], ftid[order], fd[order]
+
+
+def _lens(qlist: list) -> np.ndarray:
+    n = len(qlist)
+    return np.fromiter((len(q) for q in qlist), dtype=np.int64, count=n)
 
 
 _SENTINEL = object()
@@ -672,10 +754,10 @@ def worker_resolver(idx_bc, token: str, kernel, transpositions: bool,
 
 def cached_driver_value(cache: dict, owner, extra_key: tuple, build):
     """Driver-side once-per-owner cache shared by every broadcast-reuse
-    site (the fuzzy index here, ``local_lookup``'s words map,
-    ``compound``'s bigram map): -> ``(value, token)`` keyed on
-    ``(id(owner), *extra_key)``, validated with a weakref so a new
-    object reusing a dead owner's address can never hit its entry.
+    site (the fuzzy index here, ``compound``'s bigram map): ->
+    ``(value, token)`` keyed on ``(id(owner), *extra_key)``, validated
+    with a weakref so a new object reusing a dead owner's address can
+    never hit its entry.
 
     ``build()`` runs once per live (owner, key). The token is a driver
     uuid generated with the value — worker-side state must key on it,
@@ -696,6 +778,19 @@ def cached_driver_value(cache: dict, owner, extra_key: tuple, build):
         cache.clear()
     cache[key] = (weakref.ref(owner), value, token)
     return value, token
+
+
+# Largest vocabulary (and bigram table) the worker-local kernels collect
+# to the driver and broadcast; above it every operator takes its
+# relational delete-join shape.
+BROADCAST_VOCAB_LIMIT = 1_000_000
+
+
+def fits_broadcast(dictionary) -> bool:
+    """True when ``dictionary``'s vocabulary is small enough for the
+    driver-built, broadcast index (read at call time, so the limit is
+    one module constant for every operator)."""
+    return dictionary.num_terms <= BROADCAST_VOCAB_LIMIT
 
 
 # one index broadcast per (SparkDictionary instance, d, p)

@@ -1,8 +1,8 @@
 """Generation-scoped persist: flat storage for repeated operator calls.
 
-Operators like ``lookup_batch`` / ``lookup_compound_batch`` persist an
-intermediate relation that feeds several joins of ONE logical result
-(a diamond). A bare ``persist()`` leaks: the CacheManager holds the
+Operators like ``lookup_batch_relational`` / ``lookup_compound_batch``
+persist an intermediate relation that feeds several joins of ONE
+logical result (a diamond). A bare ``persist()`` leaks: the CacheManager holds the
 relation until explicit unpersist, so a long-lived driver accretes one
 cached relation per call. ``localCheckpoint()`` is no better here — its
 blocks are only context-cleaned on JVM GC of the RDD, which in practice
@@ -73,9 +73,8 @@ def _clear_worker_side(_) -> None:
     mark even after the caches are gone)."""
     import gc
 
-    from symspellpy_spark.operators import compound, local_lookup, neighborhood
+    from symspellpy_spark.operators import compound, neighborhood
 
-    local_lookup._STATE.clear()
     neighborhood._WORKER_RESOLVERS.clear()
     compound._WORKER_SPLIT_STATE.clear()
     gc.collect()
@@ -93,7 +92,7 @@ def release_worker_state(spark, tasks_per_core: int = 4) -> None:
     following memory-hungry stage (e.g. the dedup pipeline's Arrow
     kernels) doesn't fight it for RAM:
 
-    - driver-cached index/words/bigram broadcasts are UNPERSISTED (not
+    - driver-cached index/bigram broadcasts are UNPERSISTED (not
       destroyed): executor blocks free immediately, but a DataFrame
       plan built BEFORE the release that still closes over one of these
       broadcasts stays executable — Spark lazily re-ships an
@@ -102,10 +101,10 @@ def release_worker_state(spark, tasks_per_core: int = 4) -> None:
       cleared, so NEW plans rebuild fresh broadcasts with fresh tokens;
     - every scoped persist generation is unpersisted;
     - a best-effort fan-out job clears the per-python-worker resolver /
-      words-map / split caches across the reused worker pool (each of
-      the pool's workers holds its own deserialized dictionary + up-to-
-      ``_CACHE_CAP`` resolution cache — at 32 workers that is the
-      dominant term) and ``malloc_trim``s the freed arenas back to the
+      split caches across the reused worker pool (each of the pool's
+      workers holds its own deserialized dictionary + up-to-
+      ``_RESOLVER_CACHE_CAP`` resolution caches — at 32 workers that is
+      the dominant term) and ``malloc_trim``s the freed arenas back to the
       OS. ``tasks_per_core`` near-instant tasks per core make it
       overwhelmingly likely every pooled worker serves at least one.
 
@@ -113,13 +112,9 @@ def release_worker_state(spark, tasks_per_core: int = 4) -> None:
     workloads, 32 cores): the signatures stage returned to its
     pipeline-only cost (see BASELINE.md round-4 section).
     """
-    from symspellpy_spark.operators import compound, local_lookup, neighborhood
+    from symspellpy_spark.operators import compound, neighborhood
 
-    for cache in (
-        local_lookup._BC_CACHE,
-        neighborhood._IDX_CACHE,
-        compound._BIGRAM_CACHE,
-    ):
+    for cache in (neighborhood._IDX_CACHE, compound._BIGRAM_CACHE):
         for _ref, value, _token in list(cache.values()):
             items = value if isinstance(value, tuple) else (value,)
             for item in items:

@@ -4,12 +4,14 @@ Reference: ``SymSpell.word_segmentation`` (symspellpy.py:867-1015) — a
 triangular DP over all (start, length<=max_word_len) substrings with a
 circular Composition buffer, where each cell consults a TOP lookup.
 
-Spark shape: the O(n * max_word_len) substring enumeration, space
+Relational shape: the O(n * max_word_len) substring enumeration, space
 accounting, and probability scoring are pure Catalyst expressions; the
-inner lookups are hoisted into ONE batch ``lookup_batch`` over distinct
-part strings; only the (inherently sequential, per-document) DP relax
-loop runs in ``applyInPandas``. This mirrors the reference's exact cell
-ordering and tie-breaking (symspellpy.py:976-1013).
+inner lookups are hoisted into ONE batch ``lookup_batch_relational``
+over distinct part strings; only the (inherently sequential,
+per-document) DP relax loop runs in ``applyInPandas``. This mirrors the
+reference's exact cell ordering and tie-breaking
+(symspellpy.py:976-1013). The default shapes run the same DP doc-local
+in ``mapInPandas`` (see ``word_segmentation_batch``).
 """
 
 from __future__ import annotations
@@ -24,12 +26,9 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
 
 from symspellpy_spark.config import DistanceAlgorithm, Verbosity
+from symspellpy_spark.operators import neighborhood
 from symspellpy_spark.operators.dictionary import SparkDictionary
-from symspellpy_spark.operators.lookup import lookup_batch
-from symspellpy_spark.operators.neighborhood import (
-    fuzzy_index_broadcast,
-    worker_resolver,
-)
+from symspellpy_spark.operators.lookup import lookup_batch_relational
 
 __all__ = ["word_segmentation_batch", "nfkc_strip_hyphens_udf"]
 
@@ -57,7 +56,6 @@ def word_segmentation_batch(
     doc_col: str = "doc_id",
     text_col: str = "text",
     strategy: str = "auto",
-    broadcast_vocab_limit: int = 1_000_000,
 ) -> DataFrame:
     """-> (doc_id, segmented_string, corrected_string, distance_sum,
     log_prob_sum) — one row per document (the reference's Composition).
@@ -68,17 +66,16 @@ def word_segmentation_batch(
     into a ``mapInPandas`` kernel and the whole DP runs doc-local —
     same results, no per-substring relation.
 
-    For fuzzy (d > 0) segmentation the default (``strategy="auto"``) is
-    the broadcast-LUT path: ONE relational ``lookup_batch`` over the
-    corpus's *distinct* part strings (the delete index does its job
-    exactly once per distinct string), then only the FOUND entries are
-    broadcast as a dict and the DP runs doc-local. Unknown parts never
-    need the LUT — their score is the closed unknown-word formula — so
-    the broadcast is bounded by |distinct substrings within d of the
-    vocabulary| (≈ vocab × neighborhood, NOT corpus size). Pass
-    ``strategy="relational"`` to shuffle every scored (doc, j, i) cell
-    into a per-document ``applyInPandas`` fold instead — the shape to
-    use when the found-part set itself is too large to broadcast.
+    For fuzzy (d > 0) segmentation the default (``strategy="auto"``)
+    also runs the DP doc-local: the dictionary's delete index is
+    broadcast once (operators/neighborhood.py) and every cell query of
+    a batch resolves in one vectorized pass on the per-worker
+    :class:`TopResolver` shared with lookup and compound, cached across
+    batches. Pass ``strategy="relational"`` to resolve the corpus's
+    distinct part strings with ``lookup_batch_relational`` and shuffle
+    every scored (doc, j, i) cell into a per-document ``applyInPandas``
+    fold instead. Above ``BROADCAST_VOCAB_LIMIT`` terms both defaults
+    route to the relational shape.
     """
     cfg = dictionary.config
     if max_edit_distance is None:
@@ -92,9 +89,8 @@ def word_segmentation_batch(
     # driver (fine at dictionary scale: 82k terms ~ 2MB; a 100TB-corpus
     # vocabulary is a driver/worker-memory bottleneck) — above the
     # limit, route to the relational shape automatically
-    broadcastable = (
-        strategy != "relational"
-        and dictionary.num_terms <= broadcast_vocab_limit
+    broadcastable = strategy != "relational" and neighborhood.fits_broadcast(
+        dictionary
     )
     if max_edit_distance == 0 and broadcastable:
         return _segmentation_broadcast_d0(
@@ -169,7 +165,7 @@ def word_segmentation_batch(
         .drop("raw_part", "part1", "lead_space")
     )
 
-    lut = lookup_batch(
+    lut = lookup_batch_relational(
         parts.select("query"),
         dictionary,
         Verbosity.TOP,
@@ -592,19 +588,17 @@ def _segmentation_broadcast_fuzzy(
     """Fuzzy (d > 0) fast path: worker-local SymSpell lookup inside the
     doc-local DP kernel.
 
-    The relational path's cost is one distributed ``lookup_batch`` over
-    the corpus's distinct substrings — O(len * max_word_len) candidate
-    strings per document through a join pipeline. Here the delete-key
-    index is built ONCE on the driver as flat numpy arrays
-    (operators/neighborhood.py) and broadcast — workers deserialize it
-    at memcpy speed instead of re-deriving a ~5 s dict index each —
-    then cell queries resolve locally with the semantics of ``lookup_batch``
-    TOP (delete-neighborhood candidate gen per deletes.py:62, |len|
-    prune, exact verify with the SAME numpy kernels distance_udf uses,
-    (distance ASC, count DESC, term ASC) tie-break, ignore_pattern and
-    exact-hit short-circuits per lookup.py:70-108). Queries of a batch
-    are resolved in ONE vectorized verify call, and the resolution
-    cache persists across batches in the worker.
+    The relational path's cost is one distributed
+    ``lookup_batch_relational`` over the corpus's distinct substrings —
+    O(len * max_word_len) candidate strings per document through a join
+    pipeline. Here the delete-key index is built ONCE on the driver as
+    flat numpy arrays (operators/neighborhood.py) and broadcast —
+    workers deserialize it at memcpy speed instead of re-deriving a
+    ~5 s dict index each — then cell queries resolve locally on the
+    TopResolver's TOP mode, the semantics of ``lookup_batch`` TOP
+    (ignore_pattern and exact-hit short-circuits included). Queries of
+    a batch are resolved in ONE vectorized verify call, and the
+    resolution cache persists across batches in the worker.
     """
     from symspellpy_spark.functions.distance import (
         damerau_osa_batch,
@@ -630,14 +624,14 @@ def _segmentation_broadcast_fuzzy(
     # index built ONCE on the driver and broadcast as flat numpy arrays
     # (neighborhood.py): workers deserialize at memcpy speed instead of
     # re-deriving a ~5 s Python dict index per worker process
-    idx_bc, bc_token = fuzzy_index_broadcast(
+    idx_bc, bc_token = neighborhood.fuzzy_index_broadcast(
         docs.sparkSession, dictionary, d_, p_
     )
 
     def make_resolve():
         import re
 
-        resolver = worker_resolver(
+        resolver = neighborhood.worker_resolver(
             idx_bc, bc_token, kernel, transpositions, ign_pat=ign_pat
         )
         ws = re.compile(r"\s")

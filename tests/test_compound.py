@@ -251,9 +251,10 @@ def test_strategies_agree_no_bigrams(spark, en_dict_uni):
     assert fast == rel
 
 
-def test_vocab_limit_routes_to_relational(spark):
-    """Above broadcast_vocab_limit the auto strategy must not collect the
+def test_vocab_limit_routes_to_relational(spark, monkeypatch):
+    """Above BROADCAST_VOCAB_LIMIT the auto strategy must not collect the
     vocabulary: the plan falls back to the relational join shape."""
+    from symspellpy_spark.operators import neighborhood
     from symspellpy_spark.operators.dictionary import SparkDictionary
 
     words = spark.createDataFrame(
@@ -265,17 +266,12 @@ def test_vocab_limit_routes_to_relational(spark):
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    fast_plan = plan(lookup_compound_batch(docs, d, max_edit_distance=1))
-    assert "MapInPandas" in fast_plan
-    assert "Join" not in fast_plan
-    rel_plan = plan(
-        lookup_compound_batch(
-            docs, d, max_edit_distance=1, broadcast_vocab_limit=2
-        )
-    )
-    assert "Join" in rel_plan
-    fast = lookup_compound_batch(docs, d, max_edit_distance=1).collect()
-    rel = lookup_compound_batch(
-        docs, d, max_edit_distance=1, broadcast_vocab_limit=2
-    ).collect()
-    assert [tuple(r) for r in fast] == [tuple(r) for r in rel]
+    fast = lookup_compound_batch(docs, d, max_edit_distance=1)
+    assert "MapInPandas" in plan(fast)
+    assert "Join" not in plan(fast)
+    monkeypatch.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 2)
+    rel = lookup_compound_batch(docs, d, max_edit_distance=1)
+    assert "Join" in plan(rel)
+    assert [tuple(r) for r in fast.collect()] == [
+        tuple(r) for r in rel.collect()
+    ]

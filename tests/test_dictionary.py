@@ -111,6 +111,17 @@ def test_delete_dictionary_entry(spark):
     assert d2.max_length == 5
 
 
+def test_delete_dictionary_entry_recounts_terms(spark):
+    """num_terms gates lookup routing, so a deletion must not inherit
+    the parent's cached count."""
+    df_words = spark.createDataFrame(
+        [("steam", 10), ("steams", 5), ("steem", 8)], "term string, count long"
+    )
+    d = SparkDictionary.from_words(spark, df_words)
+    assert d.num_terms == 3  # caches the count on d
+    assert d.delete_dictionary_entry("steams").num_terms == d.num_terms - 1
+
+
 def test_save_load_roundtrip(spark, tmp_path):
     df_words = spark.createDataFrame(
         [("steam", 10), ("steams", 5)], "term string, count long"

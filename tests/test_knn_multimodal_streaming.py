@@ -1,17 +1,10 @@
-"""Tests for similarity search, multimodal plumbing, streaming dedup."""
+"""Tests for similarity search and streaming dedup."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from symspellpy_spark.operators.knn import cosine_topk, lsh_cosine_topk
-from symspellpy_spark.operators.multimodal import (
-    extract_features,
-    fake_image_decoder,
-    frame_sample,
-    media_metadata,
-    real_image_decoder,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -125,51 +118,6 @@ def test_semantic_dedup_max_list_size_keeps_group_minimum(spark):
     out = semantic_dedup(df, cents, threshold=0.9, max_list_size=3).collect()
     kept = sorted(r["vec_id"] for r in out if r["kept"])
     assert kept == [0]
-
-
-def test_media_metadata_and_features(spark):
-    docs = spark.createDataFrame(
-        [("u1", b"\x89PNG\r\n" + b"x" * 100), ("u2", None)],
-        "url string, html binary",
-    )
-    meta = media_metadata(docs).collect()
-    m = {r["url"]: r for r in meta}
-    assert m["u1"]["media_size"] == 106
-    assert m["u1"]["media_magic"] == "89504E47"
-    assert m["u2"]["media_size"] is None
-
-    feats = extract_features(docs, decoder=fake_image_decoder).collect()
-    f = {r["url"]: r for r in feats}
-    assert len(f["u1"]["features"]) == 16
-    assert f["u1"]["height"] == 8 and f["u1"]["width"] == 8
-    assert f["u2"]["features"] is None
-    # determinism
-    feats2 = extract_features(docs, decoder=fake_image_decoder).collect()
-    assert {r["url"]: r["features"] for r in feats2} == {
-        r["url"]: r["features"] for r in feats
-    }
-
-
-def test_real_decoder_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        real_image_decoder(b"payload")
-
-
-def test_frame_sample(spark):
-    docs = spark.createDataFrame(
-        [("u1", bytes(range(64)))], "url string, html binary"
-    )
-    frames = frame_sample(docs, n_frames=4).collect()
-    assert len(frames) == 4
-    assert [r["frame_idx"] for r in sorted(frames, key=lambda r: r["frame_idx"])] == [
-        0,
-        1,
-        2,
-        3,
-    ]
-    assert b"".join(
-        r["frame"] for r in sorted(frames, key=lambda r: r["frame_idx"])
-    ) == bytes(range(64))
 
 
 def test_streaming_signatures_and_exact_dedup(spark, tmp_path):

@@ -6,7 +6,10 @@ from pyspark.sql import functions as F
 
 from symspellpy_spark.config import EngineConfig, Verbosity
 from symspellpy_spark.operators.dictionary import SparkDictionary
-from symspellpy_spark.operators.lookup import lookup_batch
+from symspellpy_spark.operators.lookup import (
+    lookup_batch,
+    lookup_batch_relational,
+)
 
 DICT_PATH = "/root/reference/symspellpy/frequency_dictionary_en_82_765.txt"
 NOISY_PATH = "/root/reference/tests/fortests/noisy_query_en_1000.txt"
@@ -173,22 +176,26 @@ def test_staged_boundary_mixed_batch(spark, small_dict):
     """One batch mixing queries that resolve in the depth<=1 pre-pass,
     queries only resolvable by the full-depth join, and unknowns — the
     staged read path must agree with the unstaged semantics (reference
-    bound-shrinking changes cost, never results, symspellpy.py:590-609)."""
+    bound-shrinking changes cost, never results, symspellpy.py:590-609).
+    Both engines stage this way: the worker-local d<=1 pass plus deep
+    pass, and the relational engine's stage-1 join plus full-depth join."""
     qdf = spark.createDataFrame(
         [("steam",), ("steema",), ("steaxy",), ("zzzzzz",)], "query string"
     )
-    got = {
-        (r["query"], r["term"], r["distance"], r["count"])
-        for r in lookup_batch(qdf, small_dict, Verbosity.TOP).collect()
-    }
-    # steam: exact (d=0, stage 1); steema: 'steem'+a is the only d=1 term
-    # (stage 1); steaxy: no d<=1 term, far path finds 'steam' at d=2
-    # (count 10 beats the other d=2 candidates); zzzzzz: no suggestion
-    assert got == {
-        ("steam", "steam", 0, 10),
-        ("steema", "steem", 1, 8),
-        ("steaxy", "steam", 2, 10),
-    }
+    for engine in (lookup_batch, lookup_batch_relational):
+        got = {
+            (r["query"], r["term"], r["distance"], r["count"])
+            for r in engine(qdf, small_dict, Verbosity.TOP).collect()
+        }
+        # steam: exact (d=0, stage 1); steema: 'steem'+a is the only d=1
+        # term (stage 1); steaxy: no d<=1 term, far path finds 'steam' at
+        # d=2 (count 10 beats the other d=2 candidates); zzzzzz: no
+        # suggestion
+        assert got == {
+            ("steam", "steam", 0, 10),
+            ("steema", "steem", 1, 8),
+            ("steaxy", "steam", 2, 10),
+        }, engine.__name__
 
 
 def test_staged_closest_crosses_stages(spark, small_dict):
@@ -196,27 +203,32 @@ def test_staged_closest_crosses_stages(spark, small_dict):
     distance is 1 — the stage-1 candidate set provably contains every
     distance<=1 term, so none may be lost to the staging."""
     qdf = spark.createDataFrame([("steamx",)], "query string")
-    rows = lookup_batch(qdf, small_dict, Verbosity.CLOSEST).collect()
-    assert {(r["term"], r["distance"]) for r in rows} == {
-        ("steam", 1), ("steama", 1), ("steamb", 1),
-        ("steamc", 1), ("steams", 1),
-    }
+    for engine in (lookup_batch, lookup_batch_relational):
+        rows = engine(qdf, small_dict, Verbosity.CLOSEST).collect()
+        assert {(r["term"], r["distance"]) for r in rows} == {
+            ("steam", 1), ("steama", 1), ("steamb", 1),
+            ("steamc", 1), ("steams", 1),
+        }, engine.__name__
 
 
 def test_repeated_lookup_batch_no_cache_accretion(spark, small_dict):
-    """lookup_batch must not grow executor storage linearly with calls:
-    the staged `near` diamond is persisted generation-scoped (see
-    scoped_cache.py), so the CacheManager holds at most `keep`
+    """The relational engine must not grow executor storage linearly
+    with calls: the staged `near` diamond is persisted generation-scoped
+    (see scoped_cache.py), so the CacheManager holds at most `keep`
     generations no matter how many calls run."""
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     before = cache_mgr.cachedData().size()
     qdf = spark.createDataFrame([("steamx",), ("steamy",)], "query string")
     for _ in range(3):
-        lookup_batch(qdf, small_dict, Verbosity.TOP, max_edit_distance=2).collect()
+        lookup_batch_relational(
+            qdf, small_dict, Verbosity.TOP, max_edit_distance=2
+        ).collect()
     mid = cache_mgr.cachedData().size()
     assert mid - before <= 2, f"CacheManager grew {before} -> {mid}"
     for _ in range(4):
-        lookup_batch(qdf, small_dict, Verbosity.TOP, max_edit_distance=2).collect()
+        lookup_batch_relational(
+            qdf, small_dict, Verbosity.TOP, max_edit_distance=2
+        ).collect()
     after = cache_mgr.cachedData().size()
     assert after <= mid, f"CacheManager kept growing: {mid} -> {after}"
 

@@ -347,3 +347,23 @@ def test_top_resolver_matches_bruteforce(d):
                     best = (key, (t, dist, c))
         want = best[1] if best else None
         assert res.get(q) == want, q
+
+
+def test_d0_index_is_membership_only():
+    """At d=0 the index carries no delete keys (lookup never probes
+    them: every d=0 answer is a membership test on the terms), and both
+    resolver modes answer exact hits only."""
+    from symspellpy_spark.functions.distance import damerau_osa_batch
+    from symspellpy_spark.operators.neighborhood import TopResolver
+
+    words = {"steam": 10, "steem": 8, "a": 3}
+    idx = build_fuzzy_index(words, 0, 7)
+    assert idx.kh1.size == 0 and idx.tid1.size == 0 and idx.khd is None
+    res = TopResolver(idx, damerau_osa_batch, transpositions=True)
+    qs = ["steam", "steems", "a", "b"]
+    res.prepare(qs)
+    res.prepare_matches(qs, closest=False)
+    for q in qs:
+        want = (q, 0, words[q]) if q in words else None
+        assert res.get(q) == want, q
+        assert res.matches(q, False) == ([want] if want else []), q

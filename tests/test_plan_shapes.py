@@ -11,7 +11,10 @@ from pyspark.sql import functions as F
 from symspellpy_spark.config import EngineConfig, Verbosity
 from symspellpy_spark.operators.deletes import delete_neighborhood
 from symspellpy_spark.operators.dictionary import SparkDictionary
-from symspellpy_spark.operators.lookup import lookup_batch
+from symspellpy_spark.operators.lookup import (
+    lookup_batch,
+    lookup_batch_relational,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,15 +45,15 @@ def test_parquet_filter_pushdown(spark):
 
 
 def test_staged_lookup_broadcasts_index(spark):
-    """With broadcast_index=True the shallow pass must plan a
-    BroadcastHashJoin on the index side — never a sort-merge shuffle of
-    the dictionary per query batch."""
+    """With broadcast_index=True the relational engine's shallow pass
+    must plan a BroadcastHashJoin on the index side — never a sort-merge
+    shuffle of the dictionary per query batch."""
     words = spark.createDataFrame(
         [("steam", 10), ("steem", 8)], "term string, count long"
     )
     d = SparkDictionary.from_words(spark, words)
     q = spark.createDataFrame([("steems",)], "query string")
-    plan = _physical(lookup_batch(q, d, Verbosity.TOP))
+    plan = _physical(lookup_batch_relational(q, d, Verbosity.TOP))
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -68,10 +71,12 @@ def test_bucketed_index_join_skips_index_exchange(spark, tmp_path):
         loaded = SparkDictionary.load_bucketed(spark, "ps_bucketed_dict")
         assert loaded.config.prefix_length == d.config.prefix_length
         q = spark.createDataFrame([("steems",), ("steamz",)], "query string")
-        out = lookup_batch(q, loaded, Verbosity.TOP, broadcast_index=False)
+        out = lookup_batch_relational(
+            q, loaded, Verbosity.TOP, broadcast_index=False
+        )
         plan = _physical(out)
         assert "SelectedBucketsCount" in plan, plan
-        # results identical to the broadcast path
+        # results identical to the routed (worker-local) engine
         got = {(r["query"], r["term"], r["distance"]) for r in out.collect()}
         ref = {
             (r["query"], r["term"], r["distance"])

@@ -178,10 +178,11 @@ def test_fuzzy_ignore_pattern_strategies_agree(spark, en_dict2):
     assert fast == rel
 
 
-def test_vocab_limit_routes_to_relational(spark):
-    """Above broadcast_vocab_limit the auto strategy must NOT collect
+def test_vocab_limit_routes_to_relational(spark, monkeypatch):
+    """Above BROADCAST_VOCAB_LIMIT the auto strategy must NOT collect
     the vocabulary to the driver: the plan switches to the relational
     shape (joins) and results stay identical."""
+    from symspellpy_spark.operators import neighborhood
     from symspellpy_spark.operators.dictionary import SparkDictionary
     from symspellpy_spark.operators.segmentation import word_segmentation_batch
 
@@ -199,9 +200,9 @@ def test_vocab_limit_routes_to_relational(spark):
 
     for dist in (0, 1):
         fast = word_segmentation_batch(docs, d, max_edit_distance=dist)
-        routed = word_segmentation_batch(
-            docs, d, max_edit_distance=dist, broadcast_vocab_limit=2
-        )
+        with monkeypatch.context() as m:
+            m.setattr(neighborhood, "BROADCAST_VOCAB_LIMIT", 2)
+            routed = word_segmentation_batch(docs, d, max_edit_distance=dist)
         assert "Join" not in plan(fast)
         assert "Join" in plan(routed), dist
         cols = ["doc_id", "segmented_string", "corrected_string", "distance_sum"]
