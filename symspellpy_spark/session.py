@@ -4,6 +4,17 @@ Local-mode testing runs on local[N]; the same settings are what we'd
 submit to a real cluster (AQE, Arrow, skew-join handling). Keep shuffle
 partitions ~ cores locally; on a 1000-executor cluster this is set to
 ~2-3x total cores by the submitter.
+
+Python workers fork from ``symspellpy_spark.worker_daemon`` instead of
+``pyspark.daemon``. On Python < 3.13 pyspark's daemon made every Python
+task re-read the ``pyspark.zip`` directory 16 times (one
+``importlib.invalidate_caches()`` per task, 140-650 ms per task on a
+4-core host); the worker daemon reads it once per daemon. Workers already
+import this package for every UDF; the package root is put on the workers'
+``PYTHONPATH`` so they find it whatever the driver's working directory.
+
+The driver heap defaults to half of physical memory, capped at 24g
+(``SPARK_DRIVER_MEMORY`` overrides it).
 """
 
 from __future__ import annotations
@@ -11,6 +22,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_MAX_DRIVER_MEMORY_MB = 24 * 1024
+# the worker daemon must import this package whatever the driver's cwd
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """Half of physical memory, capped at 24g, as a Spark size string."""
+    if physical_bytes is None:
+        try:
+            physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):
+            return "24g"
+    return f"{min(physical_bytes // 2 >> 20, _MAX_DRIVER_MEMORY_MB)}m"
 
 
 def get_spark(
@@ -27,7 +52,7 @@ def get_spark(
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
-    n_cores = os.cpu_count() or 8 if cores in ("*",) else int(cores)
+    n_cores = (os.cpu_count() or 8) if cores == "*" else int(cores)
     if shuffle_partitions is None:
         shuffle_partitions = max(8, n_cores)
 
@@ -58,7 +83,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
+        .config("spark.python.daemon.module", "symspellpy_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
         # local-mode shuffle/spill funnels through ONE virtual disk; a
