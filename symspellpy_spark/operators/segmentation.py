@@ -297,9 +297,10 @@ def word_segmentation_batch(
 
 
 def _with_empties(result: DataFrame, docs: DataFrame) -> DataFrame:
-    # empty/whitespace-normalized-away phrases produce no part rows; the
+    # null, empty or normalized-away phrases produce no part rows; the
     # reference raises on these — we return the empty Composition instead
-    empties = docs.where(F.length("phrase") == 0).select(
+    # (length(null) is null, so null must be treated as empty explicitly)
+    empties = docs.where(F.coalesce(F.length("phrase"), F.lit(0)) == 0).select(
         "doc_id",
         F.lit("").alias("segmented_string"),
         F.lit("").alias("corrected_string"),

@@ -2,8 +2,10 @@
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from symspellpy_spark.operators import cluster
 from symspellpy_spark.operators.cluster import connected_components
 from symspellpy_spark.operators.dedup import (
     exact_duplicates,
@@ -275,15 +277,14 @@ def test_hash_stratified_sample(spark):
         hash_stratified_sample(df, {"en": 101})
 
 
-def test_connected_components_vs_bfs(spark):
-    rng = np.random.default_rng(5)
-    n = 300
-    edges = [(int(a), int(b)) for a, b in rng.integers(0, n, size=(200, 2)) if a != b]
-    # python BFS oracle
+def _bfs_components(edges, vertices=()):
+    """Python BFS oracle: vertex -> min id of its component. Self-loops
+    add no vertex; ``vertices`` come back as singletons when isolated."""
     adj = {}
     for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
     oracle = {}
     for start in sorted(adj):
         if start in oracle:
@@ -300,26 +301,120 @@ def test_connected_components_vs_bfs(spark):
         m = min(comp)
         for v in comp:
             oracle[v] = m
+    for v in vertices:
+        oracle.setdefault(v, v)
+    return oracle
+
+
+@pytest.fixture
+def loop_route(monkeypatch):
+    """Force connected_components onto the hash-min loop."""
+    monkeypatch.setattr(cluster, "DRIVER_EDGE_LIMIT", 0)
+
+
+def _check_vs_bfs(spark):
+    rng = np.random.default_rng(5)
+    n = 300
+    edges = [(int(a), int(b)) for a, b in rng.integers(0, n, size=(200, 2)) if a != b]
     edf = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {r["id"]: r["cluster_id"] for r in connected_components(edf).collect()}
-    assert got == oracle
+    assert got == _bfs_components(edges)
 
 
-def test_connected_components_path_converges_logarithmically(spark):
-    """Pointer jumping bounds the driver loop at O(log diameter): a
+def test_connected_components_vs_bfs(spark):
+    _check_vs_bfs(spark)
+
+
+def test_connected_components_vs_bfs_loop(spark, loop_route):
+    _check_vs_bfs(spark)
+
+
+def _check_path(spark, **kw):
+    n = 1000
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+    )
+    got = connected_components(edges, **kw)
+    assert got.where("cluster_id != 0").count() == 0
+    assert got.count() == n
+
+
+def test_connected_components_path_converges_logarithmically(spark, loop_route):
+    """Pointer jumping bounds the hash-min loop at O(log diameter): a
     1000-vertex path must fully converge within 16 iterations — 3
     one-hop rounds before adaptive jumping engages, then doubling —
     where plain one-hop hash-min would need ~1000 (measured 199 s vs
     4 s on local[8]). Long chains are real in near-dup graphs:
     partial-overlap docs A~B~C~... from the winnowing/substring
     sweeps."""
-    n = 1000
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    )
-    got = connected_components(edges, max_iterations=16)
-    assert got.where("cluster_id != 0").count() == 0
-    assert got.count() == n
+    _check_path(spark, max_iterations=16)
+
+
+def test_connected_components_path_driver_route(spark):
+    _check_path(spark)
+
+
+def test_connected_components_routes_on_edge_count(spark, monkeypatch):
+    """The loop runs only when the distinct edges exceed the limit;
+    duplicate rows and self-loops do not count."""
+    calls = []
+    loop = cluster._hash_min_labels
+
+    def spy(*args, **kw):
+        calls.append(1)
+        return loop(*args, **kw)
+
+    monkeypatch.setattr(cluster, "_hash_min_labels", spy)
+    monkeypatch.setattr(cluster, "DRIVER_EDGE_LIMIT", 3)
+    at_limit = [(1, 2), (2, 3), (7, 8), (1, 2), (4, 4)]
+    over = at_limit + [(8, 9)]
+    for edges, loops in ((at_limit, 0), (over, 1)):
+        calls.clear()
+        edf = spark.createDataFrame(edges, "id_a long, id_b long")
+        got = {r["id"]: r["cluster_id"] for r in connected_components(edf).collect()}
+        assert got == _bfs_components(edges)
+        assert len(calls) == loops, edges
+
+
+def _check_singletons(spark):
+    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    verts = spark.createDataFrame([(1,), (2,), (9,)], "id long")
+    got = {
+        r["id"]: r["cluster_id"]
+        for r in connected_components(edges, vertices=verts).collect()
+    }
+    assert got == {1: 1, 2: 1, 9: 9}
+
+
+def test_connected_components_singletons(spark):
+    _check_singletons(spark)
+
+
+def test_connected_components_singletons_loop(spark, loop_route):
+    _check_singletons(spark)
+
+
+_ids = st.integers(0, 40)
+
+
+@pytest.mark.parametrize("limit", [None, 0], ids=["driver", "loop"])
+@settings(max_examples=15, deadline=None)
+@given(
+    edges=st.lists(st.tuples(_ids, _ids), max_size=40),
+    vertices=st.lists(_ids, max_size=10),
+)
+def test_connected_components_property(spark, limit, edges, vertices):
+    """Both routes equal the BFS oracle on random multigraphs: self-loops,
+    duplicate and reversed edges, no edges, and extra vertices."""
+    edf = spark.createDataFrame(edges, "id_a long, id_b long")
+    vdf = spark.createDataFrame([(v,) for v in vertices], "id long")
+    with pytest.MonkeyPatch.context() as m:
+        if limit is not None:
+            m.setattr(cluster, "DRIVER_EDGE_LIMIT", limit)
+        rows = connected_components(edf, vertices=vdf).collect()
+    got = {r["id"]: r["cluster_id"] for r in rows}
+    assert len(got) == len(rows)
+    assert got == _bfs_components(edges, vertices)
 
 
 def test_select_canonical(spark):
@@ -338,16 +433,6 @@ def test_select_canonical(spark):
     # cluster {1,2}: 2 survives (longer text); {3,4}: tie -> smaller id 3;
     # 5 and 6 are unclustered and pass through
     assert got == [2, 3, 5, 6]
-
-
-def test_connected_components_singletons(spark):
-    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    verts = spark.createDataFrame([(1,), (2,), (9,)], "id long")
-    got = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(edges, vertices=verts).collect()
-    }
-    assert got == {1: 1, 2: 1, 9: 9}
 
 
 def test_jaccard_verify_two_phase_equals_single(spark):

@@ -87,6 +87,32 @@ def test_empty_doc(spark):
     assert got[1]["corrected_string"] == ""
 
 
+def test_null_and_empty_docs_every_route(spark):
+    """A null text gets the same empty Composition as an empty one, on
+    the d=0 and fuzzy worker-local routes and the relational shape."""
+    words = spark.createDataFrame(
+        [("the", 10), ("cat", 5)], "term string, count long"
+    )
+    d = SparkDictionary.from_words(spark, words)
+    docs = spark.createDataFrame(
+        [(1, "thecat"), (2, None), (3, "")], "doc_id long, text string"
+    )
+    empty = ("", "", 0, 0.0)
+    cols = ["doc_id", "segmented_string", "corrected_string", "distance_sum",
+            "log_prob_sum"]
+    for dist in (0, 1):
+        for strategy in ("auto", "relational"):
+            got = {
+                r[0]: tuple(r[1:])
+                for r in word_segmentation_batch(
+                    docs, d, max_edit_distance=dist, strategy=strategy
+                ).select(cols).collect()
+            }
+            assert sorted(got) == [1, 2, 3], (dist, strategy)
+            assert got[1][:3] == ("the cat", "the cat", 1), (dist, strategy)
+            assert got[2] == empty and got[3] == empty, (dist, strategy)
+
+
 @pytest.mark.slow
 def test_live_parity_d0_fast_path(spark, en_dict2, reference_symspell_module):
     """The broadcast-dict d=0 fast path must match the reference on all
