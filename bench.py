@@ -334,8 +334,8 @@ def main() -> None:
 
         # fuzzy segmentation (d=1) over a 5k-doc subset: cell lookups
         # resolve worker-locally (full-single-delete candidate gen +
-        # scan verify); the old relational cell-shuffle path remains
-        # bench-able via strategy="relational"
+        # scan verify); the relational cell-shuffle path runs above
+        # neighborhood.BROADCAST_VOCAB_LIMIT
         sdocs_d1 = sdocs.where(
             F.col("doc_id") < 5000 * en_scale
         ).localCheckpoint(eager=True)

@@ -324,7 +324,7 @@ def damerau_osa_batch(s1: pd.Series, s2: pd.Series, max_distance: int) -> pd.Ser
     return _distance_batch(s1, s2, max_distance, transpositions=True)
 
 
-_KERNELS: dict[DistanceAlgorithm, Callable[[pd.Series, pd.Series, int], pd.Series]] = {
+KERNELS: dict[DistanceAlgorithm, Callable[[pd.Series, pd.Series, int], pd.Series]] = {
     DistanceAlgorithm.LEVENSHTEIN: levenshtein_batch,
     DistanceAlgorithm.DAMERAU_OSA: damerau_osa_batch,
 }
@@ -343,7 +343,7 @@ def distance_udf(
     if comparer is not None:
         kernel = comparer
     else:
-        kernel = _KERNELS[DistanceAlgorithm(algorithm)]
+        kernel = KERNELS[DistanceAlgorithm(algorithm)]
 
     @F.pandas_udf(IntegerType())
     def _dist(s1: pd.Series, s2: pd.Series) -> pd.Series:

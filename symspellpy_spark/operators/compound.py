@@ -22,16 +22,17 @@ single SuggestItem) plus the ``_replaced_words`` audit as a map column
 (the reference hides it in mutable state, symspellpy.py:733,837-851 —
 in Spark it must be a returned result).
 
-Strategies: the default (``strategy="auto"``) mirrors fuzzy
-segmentation's worker-local shape — the delete-neighborhood index is
-built once on the driver (operators/neighborhood.py), broadcast, and
-every inner TOP lookup resolves inside the ``mapInPandas`` kernel with
-a cross-batch cache, so a document never leaves its partition (no
-token explode, no LUT joins, no groupBy shuffle). Tokenization stays
-JVM-side (``parse_words_expr``) for byte parity with the relational
-path. Above ``BROADCAST_VOCAB_LIMIT`` terms or bigrams (or for
-USER_PROVIDED distance) the relational staged-lookup shape below takes
-over automatically.
+Routing: :func:`~symspellpy_spark.operators.neighborhood.route`, the
+rule lookup and segmentation share, plus one compound condition: the
+worker-local shape needs the bigram table to fit the broadcast limit
+too. That shape mirrors fuzzy segmentation's — the delete-neighborhood
+index is built once on the driver (operators/neighborhood.py),
+broadcast, and every inner TOP lookup resolves inside the
+``mapInPandas`` kernel with a cross-batch cache, so a document never
+leaves its partition (no token explode, no LUT joins, no groupBy
+shuffle). Tokenization stays JVM-side (``parse_words_expr``) for byte
+parity with the relational shape. Above ``BROADCAST_VOCAB_LIMIT``
+terms or bigrams the relational staged-lookup shape takes over.
 """
 
 from __future__ import annotations
@@ -42,12 +43,8 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from symspellpy_spark.config import MAX_INT64, DistanceAlgorithm, Verbosity
-from symspellpy_spark.functions.distance import (
-    damerau_osa_batch,
-    distance_udf,
-    levenshtein_batch,
-)
+from symspellpy_spark.config import MAX_INT64, Verbosity
+from symspellpy_spark.functions.distance import distance_udf
 from symspellpy_spark.functions.text import (
     case_transfer_similar_py,
     parse_words_expr,
@@ -88,7 +85,7 @@ def _fold_parts(
     bigram_min: int,
 ) -> tuple[list, dict]:
     """The reference's left-to-right token fold (symspellpy.py:688-851),
-    shared by the relational and worker-local strategies so their
+    shared by the relational and worker-local routes so their
     decisions are bit-identical.
 
     Each row: ``{term1, term2, sugg, combi, splits}`` where ``sugg`` /
@@ -204,7 +201,6 @@ def lookup_compound_batch(
     ignore_term_with_digits: bool = False,
     doc_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
     """-> one row per document: (doc_id, term, distance, count, replacements)."""
     cfg = dictionary.config
@@ -212,22 +208,15 @@ def lookup_compound_batch(
         max_edit_distance = cfg.max_dictionary_edit_distance
     n_const = float(cfg.corpus_n)
     bigram_min = dictionary.bigram_count_min
-    algo = cfg.distance_algorithm
 
-    # worker-local fast path: vocabulary (and bigram table) must fit in
-    # a broadcast — above the limit the relational shape below routes
-    # every inner lookup through the distributed delete-join instead
-    if (
-        strategy != "relational"
-        and algo
-        in (DistanceAlgorithm.LEVENSHTEIN, DistanceAlgorithm.DAMERAU_OSA)
-        and neighborhood.fits_broadcast(dictionary)
-    ):
+    engine = neighborhood.route(dictionary, max_edit_distance)
+    if engine.local:
         bigram_bc, bigrams_fit = _bigram_broadcast(docs.sparkSession, dictionary)
         if bigrams_fit:
             return _compound_broadcast(
                 docs,
                 dictionary,
+                engine,
                 max_edit_distance,
                 ignore_non_words,
                 transfer_casing,
@@ -373,7 +362,7 @@ def lookup_compound_batch(
         .withColumn("tmp_term", F.concat_ws(" ", F.col("p1_term"), F.col("p2_term")))
     )
 
-    dist = distance_udf(algo, max_edit_distance)
+    dist = distance_udf(comparer=engine.kernel, max_distance=max_edit_distance)
     splits = splits.withColumn("tmp_dist", dist(F.col("term1"), F.col("tmp_term")))
     if dictionary.bigrams is not None:
         splits = splits.join(
@@ -410,11 +399,7 @@ def lookup_compound_batch(
 
     # ---- per-document sequential fold ----
     max_ed = max_edit_distance
-    pair_kernel = (
-        levenshtein_batch
-        if algo == DistanceAlgorithm.LEVENSHTEIN
-        else damerau_osa_batch
-    )
+    pair_kernel = engine.kernel
 
     def _pair_distance(a: str, b: str, bound: int) -> int:
         return int(pair_kernel(pd.Series([a]), pd.Series([b]), bound).iloc[0])
@@ -503,7 +488,7 @@ def _bigram_broadcast(spark, dictionary: SparkDictionary):
 
     ``fits=False`` means the bigram table exceeds
     ``BROADCAST_VOCAB_LIMIT`` rows and the caller must use the
-    relational strategy (joins against the distributed bigram table)
+    relational shape (joins against the distributed bigram table)
     instead of a broadcast dict. The size probe is
     ``limit(n+1).collect()`` — when it returns <= n rows that IS the
     whole table, so no separate count job runs.
@@ -535,10 +520,10 @@ def _bigram_broadcast(spark, dictionary: SparkDictionary):
     return bc, fits
 
 
-# per-python-worker split-candidate cache, keyed by the broadcast token
-# (which is unique per (dictionary, d, p) build): a token's split list
-# depends only on the token string + dictionary + d, so it is computed
-# once per worker and reused across batches
+# per-python-worker split-candidate cache, keyed by the index build key
+# (dictionary token, d, p): a token's split list depends only on the
+# token string + dictionary + d, so it is computed once per worker and
+# reused across batches
 _WORKER_SPLIT_STATE: dict = {}
 _SPLIT_CACHE_CAP = 1_000_000
 
@@ -546,6 +531,7 @@ _SPLIT_CACHE_CAP = 1_000_000
 def _compound_broadcast(
     docs: DataFrame,
     dictionary: SparkDictionary,
+    engine: neighborhood.Route,
     max_edit_distance: int,
     ignore_non_words: bool,
     transfer_casing: bool,
@@ -574,16 +560,13 @@ def _compound_broadcast(
     on edge characters).
     """
     cfg = dictionary.config
-    transpositions = cfg.distance_algorithm == DistanceAlgorithm.DAMERAU_OSA
-    kernel = damerau_osa_batch if transpositions else levenshtein_batch
-    d_ = max_edit_distance
-    p_ = cfg.prefix_length
+    kernel = engine.kernel
     n_const = float(cfg.corpus_n)
     bigram_min = dictionary.bigram_count_min
     spark = docs.sparkSession
 
-    idx_bc, bc_token = neighborhood.fuzzy_index_broadcast(
-        spark, dictionary, d_, p_
+    idx_bc, key = neighborhood.fuzzy_index_broadcast(
+        spark, dictionary, max_edit_distance, cfg.prefix_length
     )
 
     prepped = docs.select(
@@ -608,15 +591,14 @@ def _compound_broadcast(
 
     def run(batches):
         resolver = neighborhood.worker_resolver(
-            idx_bc, bc_token, kernel, transpositions
+            idx_bc, key, kernel, engine.transpositions
         )
         words = resolver.words
-        skey = (bc_token, max_ed)
-        split_cache = _WORKER_SPLIT_STATE.get(skey)
+        split_cache = _WORKER_SPLIT_STATE.get(key)
         if split_cache is None:
             split_cache = {}
-            _WORKER_SPLIT_STATE.clear()  # one dictionary per worker
-            _WORKER_SPLIT_STATE[skey] = split_cache
+            _WORKER_SPLIT_STATE.clear()  # one index build per worker
+            _WORKER_SPLIT_STATE[key] = split_cache
         bigram_map = bigram_bc.value if bigram_bc is not None else {}
 
         for pdf in batches:

@@ -14,9 +14,10 @@ exactly the true edit distance for the pairs they can reach, so a
 uniform verify-with-kernel produces identical results.
 
 ``lookup_batch`` routes every call to one of two result-identical
-engines, chosen only from the distance kernel and the vocabulary size:
+engines by :func:`~symspellpy_spark.operators.neighborhood.route`, the
+routing rule compound and segmentation share:
 
-- worker-local (built-in kernels, ``num_terms <=
+- worker-local (``num_terms <=
   BROADCAST_VOCAB_LIMIT``): the delete index is built once on the
   driver and broadcast (operators/neighborhood.py); distinct queries
   resolve inside one ``mapInPandas`` pass on the per-worker
@@ -29,16 +30,17 @@ engines, chosen only from the distance kernel and the vocabulary size:
   the vocabulary: ~8 s at 80k terms, ~39 s at 500k), paid once per
   dictionary and shared with compound and segmentation;
 - relational (:func:`lookup_batch_relational`): the delete-key join
-  below, for USER_PROVIDED kernels and vocabularies too big to
-  broadcast (including the bucketed index, ``broadcast_index=False``).
-  The relational shapes of compound and segmentation call it directly.
+  below, for vocabularies too big to broadcast. The relational shapes
+  of compound and segmentation call it directly.
 
 Relational plan shape (scale notes):
 - queries are deduplicated first (at corpus scale many documents share
   tokens — lookup cost is per *distinct* token);
-- the delete-key join broadcasts the dictionary index by default (the
-  EN index is ~676k rows / tens of MB — trivially broadcastable to
-  1000 executors; the query side streams);
+- the delete-key join broadcasts the dictionary index exactly when the
+  vocabulary fits the broadcast limit (the EN index is ~676k rows /
+  tens of MB — trivially broadcastable to 1000 executors; the query
+  side streams); above it AQE picks the join (for a bucketed index,
+  ``SparkDictionary.save_bucketed``, one with no index-side exchange);
 - cheap length prunes run as column predicates before the Arrow
   boundary; the DP kernel sees each distinct (query, term) pair once.
 """
@@ -50,12 +52,8 @@ from dataclasses import replace
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from symspellpy_spark.config import DistanceAlgorithm, Verbosity
-from symspellpy_spark.functions.distance import (
-    damerau_osa_batch,
-    distance_udf,
-    levenshtein_batch,
-)
+from symspellpy_spark.config import Verbosity
+from symspellpy_spark.functions.distance import distance_udf
 from symspellpy_spark.functions.text import (
     case_transfer_similar_py,
     case_transfer_similar_udf,
@@ -63,8 +61,9 @@ from symspellpy_spark.functions.text import (
 from symspellpy_spark.operators.deletes import delete_neighborhood
 from symspellpy_spark.operators.dictionary import SparkDictionary
 from symspellpy_spark.operators.neighborhood import (
-    fits_broadcast,
+    Route,
     fuzzy_index_broadcast,
+    route,
     worker_resolver,
 )
 from symspellpy_spark.operators.scoped_cache import persist_scoped
@@ -92,21 +91,7 @@ def lookup_batch(
         max_edit_distance = cfg.max_dictionary_edit_distance
     if max_edit_distance > cfg.max_dictionary_edit_distance:
         raise ValueError("Distance too large")
-    if cfg.distance_algorithm in (
-        DistanceAlgorithm.LEVENSHTEIN,
-        DistanceAlgorithm.DAMERAU_OSA,
-    ) and fits_broadcast(dictionary):
-        return _lookup_local(
-            queries,
-            dictionary,
-            verbosity,
-            max_edit_distance,
-            include_unknown,
-            ignore_pattern,
-            transfer_casing,
-            query_col,
-        )
-    return lookup_batch_relational(
+    args = (
         queries,
         dictionary,
         verbosity,
@@ -116,6 +101,10 @@ def lookup_batch(
         transfer_casing,
         query_col,
     )
+    engine = route(dictionary, max_edit_distance)
+    if engine.local:
+        return _lookup_local(*args, engine)
+    return lookup_batch_relational(*args)
 
 
 def _lookup_local(
@@ -127,6 +116,7 @@ def _lookup_local(
     ignore_pattern: str | None,
     transfer_casing: bool,
     query_col: str,
+    engine: Route,
 ) -> DataFrame:
     """The worker-local engine: one ``mapInPandas`` pass over the
     queries, hash-partitioned so each distinct query is answered once.
@@ -138,13 +128,10 @@ def _lookup_local(
     ignore short-circuit, the ALL one-char quirk, ``transfer_casing``
     and ``include_unknown`` apply as in the relational engine.
     """
-    cfg = dictionary.config
-    transpositions = cfg.distance_algorithm == DistanceAlgorithm.DAMERAU_OSA
-    kernel = damerau_osa_batch if transpositions else levenshtein_batch
     d = max_edit_distance
     spark = queries.sparkSession
-    idx_bc, token = fuzzy_index_broadcast(
-        spark, dictionary, d, cfg.prefix_length
+    idx_bc, key = fuzzy_index_broadcast(
+        spark, dictionary, d, dictionary.config.prefix_length
     )
 
     q = queries.select(F.col(query_col).alias("query")).where(
@@ -168,7 +155,9 @@ def _lookup_local(
     closest = verbosity == Verbosity.CLOSEST
 
     def run(batches):
-        resolver = worker_resolver(idx_bc, token, kernel, transpositions)
+        resolver = worker_resolver(
+            idx_bc, key, engine.kernel, engine.transpositions
+        )
         words = resolver.words
         one_char = (
             [t for t in words if len(t) == 1] if verbosity == Verbosity.ALL else []
@@ -242,20 +231,20 @@ def lookup_batch_relational(
     ignore_pattern: str | None = None,
     transfer_casing: bool = False,
     query_col: str = "query",
-    broadcast_index: bool = True,
 ) -> DataFrame:
     """The relational engine: delete-key join -> verify -> verbosity
     ranks, same contract as :func:`lookup_batch`.
 
-    ``broadcast_index=False`` leaves the join strategy to AQE — the
-    plan for a bucketed index (``SparkDictionary.save_bucketed``) too
-    big to broadcast.
+    The index side is broadcast exactly when the vocabulary fits the
+    broadcast limit; above it AQE picks the join.
     """
     cfg = dictionary.config
     if max_edit_distance is None:
         max_edit_distance = cfg.max_dictionary_edit_distance
     if max_edit_distance > cfg.max_dictionary_edit_distance:
         raise ValueError("Distance too large")
+    engine = route(dictionary, max_edit_distance)
+    broadcast_index = engine.local
 
     q = queries.select(F.col(query_col).alias("query")).where(
         F.col("query").isNotNull()
@@ -355,7 +344,7 @@ def lookup_batch_relational(
             remainder crosses the Arrow boundary into the numpy kernel.
             """
             lv = F.levenshtein(F.col("phrase"), F.col("term"), bound)
-            if cfg.distance_algorithm == DistanceAlgorithm.LEVENSHTEIN:
+            if not engine.transpositions:
                 out = cand.withColumn("distance", lv).where(
                     F.col("distance") >= 0
                 )
@@ -364,7 +353,7 @@ def lookup_batch_relational(
                 easy = withlv.where(
                     (F.col("__lv") >= 0) & (F.col("__lv") <= 1)
                 ).withColumn("distance", F.col("__lv"))
-                dist = distance_udf(cfg.distance_algorithm, bound)
+                dist = distance_udf(comparer=engine.kernel, max_distance=bound)
                 hard = (
                     withlv.where((F.col("__lv") < 0) | (F.col("__lv") > 1))
                     .withColumn(
@@ -408,9 +397,8 @@ def lookup_batch_relational(
             # usually a small fraction — broadcast IT rather than the
             # full index, so the common near-empty case costs a token
             # broadcast plus one scan of the cached index instead of a
-            # full-index broadcast build (or shuffle) per action. Callers
-            # with huge query sets AND huge remainders should pass
-            # broadcast_index=False, which defers to AQE entirely.
+            # full-index broadcast build (or shuffle) per action. Above
+            # the broadcast limit both joins are left to AQE.
             far = verified(
                 cand_pairs(
                     unresolved,

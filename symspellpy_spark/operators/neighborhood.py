@@ -22,22 +22,29 @@ utf-8 bytes (`pack_keys`). Equal keys always hash equal; a collision
 can only ADD a false candidate, which the exact distance verify that
 always follows filters out — so hashing never changes results.
 
-Scale note: the driver-side build is a Python loop over the vocabulary
-(~7 s at 82k terms, linear in vocab size). Callers gate on
-:func:`fits_broadcast` (``BROADCAST_VOCAB_LIMIT`` terms) and fall back
-to their relational delete-join shapes above it, so the driver never
-builds an index for a web-scale vocabulary.
+Routing: :func:`route` is the one place an operator call picks its
+engine and distance kernel. ``lookup_batch``, ``lookup_compound_batch``
+and ``word_segmentation_batch`` run worker-local on this index when
+:func:`fits_broadcast` holds (``BROADCAST_VOCAB_LIMIT`` terms; compound
+also needs its bigrams to fit) and take their relational delete-join
+shapes above it, so the driver never builds an index for a web-scale
+vocabulary (the build is a Python loop, ~7 s at 82k terms).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
 
+from symspellpy_spark.config import DistanceAlgorithm
+from symspellpy_spark.functions.distance import KERNELS
+
 __all__ = [
     "BROADCAST_VOCAB_LIMIT",
     "FuzzyIndex",
+    "Route",
     "TopResolver",
     "build_fuzzy_index",
     "delete_neighborhood_py",
@@ -45,6 +52,7 @@ __all__ = [
     "fuzzy_index_broadcast",
     "grouped_arange",
     "pack_keys",
+    "route",
     "within_one",
     "worker_resolver",
 ]
@@ -529,12 +537,23 @@ class TopResolver:
         self.ign = re.compile(f"^(?:{ign_pat})") if ign_pat is not None else None
         self._term_bags: np.ndarray | None = None  # lazy: d>=2 only
 
+    def probe(self, q):
+        """The TOP answer no search can beat: an exact hit
+        ``(q, 0, count)``, else an ignore-pattern hit ``(q, 0, 1)``,
+        else ``None`` — the whole TOP lookup at d = 0."""
+        c = self.words.get(q)
+        if c is not None:
+            return (q, 0, c)
+        if self.ign is not None and self.ign.match(q):
+            return (q, 0, 1)
+        return None
+
     def prepare(self, queries) -> None:
         """Resolve every uncached query of ``queries`` into the TOP cache."""
         index = self.index
         words = self.words
         cache = self.cache
-        ign = self.ign
+        probe = self.probe
         d = index.d
         max_len = index.max_len
         if len(cache) > _RESOLVER_CACHE_CAP:
@@ -543,13 +562,9 @@ class TopResolver:
         for q in queries:
             if q in cache:
                 continue
-            c = words.get(q)
-            if c is not None:
-                cache[q] = (q, 0, c)
-            elif ign is not None and ign.match(q):
-                cache[q] = (q, 0, 1)
-            elif d == 0 or len(q) - d > max_len:
-                cache[q] = None
+            hit = probe(q)
+            if hit is not None or d == 0 or len(q) - d > max_len:
+                cache[q] = hit
             else:
                 qlist.append(q)
         if not qlist:
@@ -719,36 +734,33 @@ _SENTINEL = object()
 
 
 # per-python-worker TopResolver cache, keyed by the driver-generated
-# broadcast token (not id(bc): CPython reuses addresses) — python
-# workers are reused, so the deserialized index, words map and
-# resolution cache persist across batches AND across operators
-# (segmentation, compound) sharing one dictionary/broadcast
+# build key (not id(bc): CPython reuses addresses) — python workers are
+# reused, so the deserialized index, words map and resolution cache
+# persist across batches AND across operators sharing one dictionary
 _WORKER_RESOLVERS: dict = {}
 
 
-def worker_resolver(idx_bc, token: str, kernel, transpositions: bool,
+def worker_resolver(idx_bc, key: tuple, kernel, transpositions: bool,
                     ign_pat=None) -> TopResolver:
     """Executor-side accessor for the shared per-worker TopResolver.
 
-    ``token`` comes from :func:`fuzzy_index_broadcast` and is unique per
-    (dictionary, d, p) build, so a worker never resolves against a stale
-    index; ``ign_pat`` is part of the key because it changes resolution
-    results. One dictionary's resolvers are kept at a time (the common
-    case is one dictionary per application)."""
-    key = (token, ign_pat)
-    resolver = _WORKER_RESOLVERS.get(key)
+    ``key`` is the ``(dictionary token, d, p)`` build key from
+    :func:`fuzzy_index_broadcast`, so a worker never resolves against a
+    stale index; ``ign_pat`` is part of the cache key because it changes
+    resolution results. A worker keeps one dictionary's resolvers for
+    every ``(d, p, ign_pat)``: a service calling d = 0 segmentation and
+    d = 2 lookup on one dictionary keeps both warm, and only a resolver
+    built from another dictionary evicts them (the common case is one
+    dictionary per application)."""
+    rkey = (*key, ign_pat)
+    resolver = _WORKER_RESOLVERS.get(rkey)
     if resolver is None:
         resolver = TopResolver(
             idx_bc.value, kernel, transpositions, ign_pat=ign_pat
         )
-        # one DICTIONARY per worker, not one resolver: evict only
-        # entries built from a different broadcast, so a job alternating
-        # operators with different ign_pat (segmentation sets one,
-        # compound does not) keeps both resolvers instead of rebuilding
-        # the index and discarding the resolution cache every stage
-        for k in [k for k in _WORKER_RESOLVERS if k[0] != token]:
+        for k in [k for k in _WORKER_RESOLVERS if k[0] != key[0]]:
             del _WORKER_RESOLVERS[k]
-        _WORKER_RESOLVERS[key] = resolver
+        _WORKER_RESOLVERS[rkey] = resolver
     return resolver
 
 
@@ -793,20 +805,60 @@ def fits_broadcast(dictionary) -> bool:
     return dictionary.num_terms <= BROADCAST_VOCAB_LIMIT
 
 
-# one index broadcast per (SparkDictionary instance, d, p)
+@dataclass(frozen=True)
+class Route:
+    """How one operator call runs (see :func:`route`)."""
+
+    local: bool  # worker-local on the index broadcast, else relational
+    kernel: Callable  # (pd.Series, pd.Series, int) -> pd.Series
+    transpositions: bool  # the kernel counts adjacent swaps as one edit
+
+
+def route(dictionary, max_edit_distance: int) -> Route:
+    """The engine and distance kernel of a lookup, compound or
+    segmentation call: worker-local when the vocabulary
+    :func:`fits_broadcast`, relational otherwise, whatever the distance
+    algorithm.
+
+    ``EngineConfig`` carries no comparer, so USER_PROVIDED has no kernel
+    and raises at ``max_edit_distance > 0``. At 0 every lookup is a
+    membership probe that reads no kernel; compound's whole-phrase
+    distance, the one distance left, then uses Damerau-OSA, the
+    reference's default comparer."""
+    algo = DistanceAlgorithm(dictionary.config.distance_algorithm)
+    if algo not in KERNELS:
+        if max_edit_distance > 0:
+            raise ValueError(
+                f"{algo.name} distance needs a comparer, which EngineConfig "
+                "does not carry: use LEVENSHTEIN or DAMERAU_OSA, or "
+                "max_edit_distance=0"
+            )
+        algo = DistanceAlgorithm.DAMERAU_OSA
+    return Route(
+        fits_broadcast(dictionary),
+        KERNELS[algo],
+        algo == DistanceAlgorithm.DAMERAU_OSA,
+    )
+
+
+# one entry per SparkDictionary instance: its token and its index
+# broadcasts by (d, p)
 _IDX_CACHE: dict = {}
 
 
 def fuzzy_index_broadcast(spark, dictionary, d: int, p: int):
-    """-> ``(broadcast(FuzzyIndex), token)`` with driver-side caching,
-    so repeated jobs over the same dictionary reuse one build + one
-    broadcast (and workers keep their warm state + result caches)."""
-
-    def build():
+    """-> ``(broadcast(FuzzyIndex), key)`` with driver-side caching, so
+    repeated jobs over the same dictionary reuse one build + one
+    broadcast (and workers keep their warm state + result caches).
+    ``key`` is ``(dictionary token, d, p)``, the :func:`worker_resolver`
+    key."""
+    builds, token = cached_driver_value(_IDX_CACHE, dictionary, (), dict)
+    bc = builds.get((d, p))
+    if bc is None:
         words = {
             r["term"]: r["count"]
             for r in dictionary.words.select("term", "count").collect()
         }
-        return spark.sparkContext.broadcast(build_fuzzy_index(words, d, p))
-
-    return cached_driver_value(_IDX_CACHE, dictionary, (d, p), build)
+        bc = spark.sparkContext.broadcast(build_fuzzy_index(words, d, p))
+        builds[(d, p)] = bc
+    return bc, (token, d, p)

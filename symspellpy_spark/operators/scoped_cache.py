@@ -116,7 +116,8 @@ def release_worker_state(spark, tasks_per_core: int = 4) -> None:
 
     for cache in (neighborhood._IDX_CACHE, compound._BIGRAM_CACHE):
         for _ref, value, _token in list(cache.values()):
-            items = value if isinstance(value, tuple) else (value,)
+            # index builds by (d, p); (bigram broadcast, fits)
+            items = value.values() if isinstance(value, dict) else value
             for item in items:
                 if hasattr(item, "unpersist"):
                     try:

@@ -10,8 +10,8 @@ inner lookups are hoisted into ONE batch ``lookup_batch_relational``
 over distinct part strings; only the (inherently sequential,
 per-document) DP relax loop runs in ``applyInPandas``. This mirrors the
 reference's exact cell ordering and tie-breaking
-(symspellpy.py:976-1013). The default shapes run the same DP doc-local
-in ``mapInPandas`` (see ``word_segmentation_batch``).
+(symspellpy.py:976-1013). Below the broadcast limit the same DP runs
+doc-local in ``mapInPandas`` (see ``word_segmentation_batch``).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
 
-from symspellpy_spark.config import DistanceAlgorithm, Verbosity
+from symspellpy_spark.config import Verbosity
 from symspellpy_spark.operators import neighborhood
 from symspellpy_spark.operators.dictionary import SparkDictionary
 from symspellpy_spark.operators.lookup import lookup_batch_relational
@@ -55,27 +55,21 @@ def word_segmentation_batch(
     ignore_pattern: str | None = None,
     doc_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
 ) -> DataFrame:
     """-> (doc_id, segmented_string, corrected_string, distance_sum,
     log_prob_sum) — one row per document (the reference's Composition).
 
-    At ``max_edit_distance=0`` every inner lookup is a plain membership
-    probe, so instead of exploding O(len * max_word_len) substring rows
-    into a join + shuffle, the words table is broadcast as a plain dict
-    into a ``mapInPandas`` kernel and the whole DP runs doc-local —
-    same results, no per-substring relation.
-
-    For fuzzy (d > 0) segmentation the default (``strategy="auto"``)
-    also runs the DP doc-local: the dictionary's delete index is
-    broadcast once (operators/neighborhood.py) and every cell query of
-    a batch resolves in one vectorized pass on the per-worker
-    :class:`TopResolver` shared with lookup and compound, cached across
-    batches. Pass ``strategy="relational"`` to resolve the corpus's
-    distinct part strings with ``lookup_batch_relational`` and shuffle
-    every scored (doc, j, i) cell into a per-document ``applyInPandas``
-    fold instead. Above ``BROADCAST_VOCAB_LIMIT`` terms both defaults
-    route to the relational shape.
+    Routed by :func:`~symspellpy_spark.operators.neighborhood.route`,
+    like lookup and compound. Up to ``BROADCAST_VOCAB_LIMIT`` terms the
+    DP runs doc-local in ``mapInPandas`` on the per-worker
+    :class:`TopResolver` over the dictionary's cached index broadcast
+    (operators/neighborhood.py), shared with lookup and compound: at
+    d = 0 each cell is one membership probe of the resolver's words
+    map; at d > 0 every cell query of a batch resolves in one
+    vectorized pass, cached across batches. Above the limit the
+    corpus's distinct part strings resolve with
+    ``lookup_batch_relational`` and every scored (doc, j, i) cell
+    shuffles into a per-document ``applyInPandas`` fold.
     """
     cfg = dictionary.config
     if max_edit_distance is None:
@@ -85,27 +79,12 @@ def word_segmentation_batch(
     n_const = float(cfg.corpus_n)
     max_word_len = max_segmentation_word_length
 
-    # the broadcast fast paths collect the whole vocabulary to the
-    # driver (fine at dictionary scale: 82k terms ~ 2MB; a 100TB-corpus
-    # vocabulary is a driver/worker-memory bottleneck) — above the
-    # limit, route to the relational shape automatically
-    broadcastable = strategy != "relational" and neighborhood.fits_broadcast(
-        dictionary
-    )
-    if max_edit_distance == 0 and broadcastable:
-        return _segmentation_broadcast_d0(
+    engine = neighborhood.route(dictionary, max_edit_distance)
+    if engine.local:
+        return _segmentation_local(
             docs,
             dictionary,
-            max_word_len,
-            ignore_pattern,
-            n_const,
-            doc_col,
-            text_col,
-        )
-    if strategy == "auto" and broadcastable:
-        return _segmentation_broadcast_fuzzy(
-            docs,
-            dictionary,
+            engine,
             max_edit_distance,
             max_word_len,
             ignore_pattern,
@@ -323,10 +302,9 @@ def _segment_phrase(
 ) -> tuple[str, str, int, float]:
     """The reference's triangular DP over one phrase
     (symspellpy.py:925-1013), parameterized by ``resolve(query) ->
-    (s_term, s_dist, s_count) | None`` — the only piece that differs
-    between the d=0 membership kernel and the fuzzy broadcast-LUT
-    kernel. Every scoring expression mirrors the relational path's
-    Catalyst expression, so all strategies are bit-identical."""
+    (s_term, s_dist, s_count) | None`` — the resolver's d = 0 probe or
+    its TOP lookup. Every scoring expression mirrors the relational
+    route's Catalyst expression, so both routes are bit-identical."""
     import re
 
     global _WS_RE
@@ -475,19 +453,39 @@ def _segment_phrase_ascii(
     return comps[idx]
 
 
-def _run_doc_local_dp(
+def _segmentation_local(
     docs: DataFrame,
-    make_resolve,
+    dictionary: SparkDictionary,
+    engine: neighborhood.Route,
+    max_edit_distance: int,
     max_word_len: int,
+    ignore_pattern: str | None,
     n_const: float,
     doc_col: str,
     text_col: str,
 ) -> DataFrame:
-    """Common mapInPandas harness for the doc-local DP kernels.
+    """The worker-local route: the doc-local DP in ``mapInPandas``,
+    each cell resolved on the shared :class:`TopResolver` — the
+    semantics of ``lookup_batch`` TOP, ignore_pattern and exact-hit
+    short-circuits included.
 
-    ``make_resolve()`` runs once per python worker and returns the
-    ``resolve`` closure (typically over a broadcast map)."""
+    The relational route's cost is one distributed
+    ``lookup_batch_relational`` over the corpus's distinct substrings —
+    O(len * max_word_len) candidate strings per document through a join
+    pipeline. Here the index is built ONCE per (dictionary, d) on the
+    driver as flat numpy arrays and broadcast, and workers keep the
+    deserialized resolver across calls. At d = 0 a cell is one
+    ``TopResolver.probe`` (a words-map lookup, plus the ignore pattern);
+    at d > 0 a batch's cell queries resolve in ONE vectorized verify
+    call first, and the resolution cache persists across batches.
+    """
     log10_n = math.log10(n_const)
+    idx_bc, key = neighborhood.fuzzy_index_broadcast(
+        docs.sparkSession,
+        dictionary,
+        max_edit_distance,
+        dictionary.config.prefix_length,
+    )
     norm = nfkc_strip_hyphens_udf()
     prepped = docs.select(
         F.col(doc_col).alias("doc_id"), norm(F.col(text_col)).alias("phrase")
@@ -498,12 +496,48 @@ def _run_doc_local_dp(
         "distance_sum int, log_prob_sum double"
     )
 
+    def cell_queries(phrases, ws) -> set:
+        """Every distinct cell query of the batch (the reference's
+        space accounting, symspellpy.py:925-942)."""
+        todo = set()
+        add = todo.add
+        for phrase in phrases:
+            if not phrase:
+                continue
+            n_j = len(phrase)
+            if phrase.isascii() and ws.search(phrase) is None:
+                # cell queries are plain slices of the lowered phrase
+                # (same guard as _segment_phrase_ascii)
+                low = phrase.lower()
+                for j in range(n_j):
+                    imax = min(n_j - j, max_word_len) + j + 1
+                    for e in range(j + 1, imax):
+                        add(low[j:e])
+                continue
+            for j in range(n_j):
+                imax = min(n_j - j, max_word_len)
+                for i in range(1, imax + 1):
+                    raw = phrase[j : j + i]
+                    if ws.match(raw[:1]):
+                        raw = raw[1:]
+                    add(raw.replace(" ", "").lower())
+        return todo
+
     def run(batches):
-        made = make_resolve()
-        prepare, resolve = made if isinstance(made, tuple) else (None, made)
+        import re
+
+        resolver = neighborhood.worker_resolver(
+            idx_bc,
+            key,
+            engine.kernel,
+            engine.transpositions,
+            ign_pat=ignore_pattern,
+        )
+        resolve = resolver.get if max_edit_distance else resolver.probe
+        ws = re.compile(r"\s")
         for pdf in batches:
-            if prepare is not None:
-                prepare(list(pdf["phrase"]))
+            if max_edit_distance:
+                resolver.prepare(cell_queries(pdf["phrase"], ws))
             out = []
             for doc_id, phrase in zip(pdf["doc_id"], pdf["phrase"]):
                 if phrase is None or len(phrase) == 0:
@@ -532,142 +566,3 @@ def _run_doc_local_dp(
         live = live.repartition(para * 2)
     result = live.mapInPandas(run, schema=out_schema)
     return _with_empties(result, prepped)
-
-
-def _segmentation_broadcast_d0(
-    docs: DataFrame,
-    dictionary: SparkDictionary,
-    max_word_len: int,
-    ignore_pattern: str | None,
-    n_const: float,
-    doc_col: str,
-    text_col: str,
-) -> DataFrame:
-    """d=0 fast path: broadcast words map + doc-local DP in mapInPandas.
-
-    NOTE on scale: the whole vocabulary is collected to the driver (fine
-    at dictionary scale, 82k terms ≈ 2 MB; a web-scale vocab should use
-    the relational d>0 path or a pruned vocabulary instead).
-    """
-    words_map = {
-        r["term"]: r["count"] for r in dictionary.words.select("term", "count").collect()
-    }
-    bc = docs.sparkSession.sparkContext.broadcast(words_map)
-    ign_pat = ignore_pattern
-
-    def make_resolve():
-        import re
-
-        words = bc.value
-        ign = re.compile(f"^(?:{ign_pat})") if ign_pat is not None else None
-
-        def resolve(query):
-            count = words.get(query)
-            if count is not None:
-                return (query, 0, count)
-            if ign is not None and ign.match(query):
-                return (query, 0, 1)
-            return None
-
-        return resolve
-
-    return _run_doc_local_dp(
-        docs, make_resolve, max_word_len, n_const, doc_col, text_col
-    )
-
-
-def _segmentation_broadcast_fuzzy(
-    docs: DataFrame,
-    dictionary: SparkDictionary,
-    max_edit_distance: int,
-    max_word_len: int,
-    ignore_pattern: str | None,
-    n_const: float,
-    doc_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Fuzzy (d > 0) fast path: worker-local SymSpell lookup inside the
-    doc-local DP kernel.
-
-    The relational path's cost is one distributed
-    ``lookup_batch_relational`` over the corpus's distinct substrings —
-    O(len * max_word_len) candidate strings per document through a join
-    pipeline. Here the delete-key index is built ONCE on the driver as
-    flat numpy arrays (operators/neighborhood.py) and broadcast —
-    workers deserialize it at memcpy speed instead of re-deriving a
-    ~5 s dict index each — then cell queries resolve locally on the
-    TopResolver's TOP mode, the semantics of ``lookup_batch`` TOP
-    (ignore_pattern and exact-hit short-circuits included). Queries of
-    a batch are resolved in ONE vectorized verify call, and the
-    resolution cache persists across batches in the worker.
-    """
-    from symspellpy_spark.functions.distance import (
-        damerau_osa_batch,
-        levenshtein_batch,
-    )
-
-    cfg = dictionary.config
-    if cfg.distance_algorithm not in (
-        DistanceAlgorithm.LEVENSHTEIN,
-        DistanceAlgorithm.DAMERAU_OSA,
-    ):
-        raise ValueError(
-            "strategy='auto' fuzzy segmentation supports the built-in "
-            "kernels; pass strategy='relational' for USER_PROVIDED"
-        )
-    transpositions = cfg.distance_algorithm == DistanceAlgorithm.DAMERAU_OSA
-    kernel = damerau_osa_batch if transpositions else levenshtein_batch
-    d_ = max_edit_distance
-    p_ = cfg.prefix_length
-    dict_max_len = dictionary.max_length
-    ign_pat = ignore_pattern
-
-    # index built ONCE on the driver and broadcast as flat numpy arrays
-    # (neighborhood.py): workers deserialize at memcpy speed instead of
-    # re-deriving a ~5 s Python dict index per worker process
-    idx_bc, bc_token = neighborhood.fuzzy_index_broadcast(
-        docs.sparkSession, dictionary, d_, p_
-    )
-
-    def make_resolve():
-        import re
-
-        resolver = neighborhood.worker_resolver(
-            idx_bc, bc_token, kernel, transpositions, ign_pat=ign_pat
-        )
-        ws = re.compile(r"\s")
-
-        def prepare(phrases):
-            """Enumerate every distinct cell query of the batch (the
-            reference's space accounting, symspellpy.py:925-942) and
-            resolve them in one vectorized TopResolver pass."""
-            todo = set()
-            add = todo.add
-            for phrase in phrases:
-                if not phrase:
-                    continue
-                n_j = len(phrase)
-                if phrase.isascii() and ws.search(phrase) is None:
-                    # cell queries are plain slices of the lowered
-                    # phrase (same guard as _segment_phrase_ascii)
-                    low = phrase.lower()
-                    for j in range(n_j):
-                        imax = min(n_j - j, max_word_len) + j + 1
-                        for e in range(j + 1, imax):
-                            add(low[j:e])
-                    continue
-                for j in range(n_j):
-                    imax = min(n_j - j, max_word_len)
-                    for i in range(1, imax + 1):
-                        raw = phrase[j : j + i]
-                        if ws.match(raw[:1]):
-                            raw = raw[1:]
-                        todo.add(raw.replace(" ", "").lower())
-            resolver.prepare(todo)
-            return None
-
-        return prepare, resolver.get
-
-    return _run_doc_local_dp(
-        docs, make_resolve, max_word_len, n_const, doc_col, text_col
-    )

@@ -152,12 +152,12 @@ def test_empty_and_trivial_docs(spark):
     assert got[2]["term"] == "zzzz" and got[2]["distance"] == 0 and got[2]["count"] == 0
 
 
-def test_repeated_compound_no_cache_accretion(spark, en_dict_uni):
+def test_repeated_compound_no_cache_accretion(spark, en_dict_uni, relational_route):
     """The RELATIONAL path's shared LUT is generation-scoped: repeated
-    calls must not grow the CacheManager unboundedly. (Pinned to
-    strategy="relational": the default now routes this vocab to the
-    worker-local kernel, which persists nothing — the behavior under
-    test would silently stop executing.)"""
+    calls must not grow the CacheManager unboundedly. (Pinned to the
+    relational route: this vocab otherwise routes to the worker-local
+    kernel, which persists nothing — the behavior under test would
+    silently stop executing.)"""
     from symspellpy_spark.operators.compound import lookup_compound_batch
 
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
@@ -166,22 +166,24 @@ def test_repeated_compound_no_cache_accretion(spark, en_dict_uni):
         "doc_id long, text string",
     )
     before = cache_mgr.cachedData().size()
-    for _ in range(3):
-        lookup_compound_batch(
-            docs, en_dict_uni, max_edit_distance=2, strategy="relational"
-        ).collect()
-    mid = cache_mgr.cachedData().size()
-    # each call may keep `keep` generations per scope (compound.lut and
-    # the nested lookup_batch.near), but the count must not grow per call
-    for _ in range(3):
-        lookup_compound_batch(
-            docs, en_dict_uni, max_edit_distance=2, strategy="relational"
-        ).collect()
-    after = cache_mgr.cachedData().size()
+    with relational_route():
+        for _ in range(3):
+            lookup_compound_batch(
+                docs, en_dict_uni, max_edit_distance=2
+            ).collect()
+        mid = cache_mgr.cachedData().size()
+        # each call may keep `keep` generations per scope (compound.lut
+        # and the nested lookup_batch.near), but the count must not grow
+        # per call
+        for _ in range(3):
+            lookup_compound_batch(
+                docs, en_dict_uni, max_edit_distance=2
+            ).collect()
+        after = cache_mgr.cachedData().size()
     assert after <= mid, (before, mid, after)
 
 
-def test_strategies_agree(spark, en_dict_bi):
+def test_strategies_agree(spark, en_dict_bi, relational_route):
     """The worker-local kernel (default) and the relational staged-lookup
     path must be bit-identical — merge repairs, split repairs with and
     without bigram boost, unknown tokens, numbers/acronyms, casing."""
@@ -215,21 +217,22 @@ def test_strategies_agree(spark, en_dict_bi):
                 docs, en_dict_bi, max_edit_distance=2, **kw
             ).collect()
         }
-        rel = {
-            r["doc_id"]: (
-                r["term"],
-                r["distance"],
-                r["count"],
-                sorted((r["replacements"] or {}).items()),
-            )
-            for r in lookup_compound_batch(
-                docs, en_dict_bi, max_edit_distance=2, strategy="relational", **kw
-            ).collect()
-        }
+        with relational_route():
+            rel = {
+                r["doc_id"]: (
+                    r["term"],
+                    r["distance"],
+                    r["count"],
+                    sorted((r["replacements"] or {}).items()),
+                )
+                for r in lookup_compound_batch(
+                    docs, en_dict_bi, max_edit_distance=2, **kw
+                ).collect()
+            }
         assert fast == rel, kw
 
 
-def test_strategies_agree_no_bigrams(spark, en_dict_uni):
+def test_strategies_agree_no_bigrams(spark, en_dict_uni, relational_route):
     """Without a bigram dictionary the Naive-Bayes split scoring clamps
     to bigram_count_min — both strategies must take that branch alike."""
     docs = spark.createDataFrame(
@@ -242,12 +245,13 @@ def test_strategies_agree_no_bigrams(spark, en_dict_uni):
             docs, en_dict_uni, max_edit_distance=2
         ).collect()
     }
-    rel = {
-        r["doc_id"]: (r["term"], r["distance"], r["count"])
-        for r in lookup_compound_batch(
-            docs, en_dict_uni, max_edit_distance=2, strategy="relational"
-        ).collect()
-    }
+    with relational_route():
+        rel = {
+            r["doc_id"]: (r["term"], r["distance"], r["count"])
+            for r in lookup_compound_batch(
+                docs, en_dict_uni, max_edit_distance=2
+            ).collect()
+        }
     assert fast == rel
 
 

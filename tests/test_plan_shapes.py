@@ -45,9 +45,10 @@ def test_parquet_filter_pushdown(spark):
 
 
 def test_staged_lookup_broadcasts_index(spark):
-    """With broadcast_index=True the relational engine's shallow pass
-    must plan a BroadcastHashJoin on the index side — never a sort-merge
-    shuffle of the dictionary per query batch."""
+    """When the vocabulary fits the broadcast limit the relational
+    engine's shallow pass must plan a BroadcastHashJoin on the index
+    side — never a sort-merge shuffle of the dictionary per query
+    batch."""
     words = spark.createDataFrame(
         [("steam", 10), ("steem", 8)], "term string, count long"
     )
@@ -57,7 +58,7 @@ def test_staged_lookup_broadcasts_index(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_bucketed_index_join_skips_index_exchange(spark, tmp_path):
+def test_bucketed_index_join_skips_index_exchange(spark, tmp_path, relational_route):
     """S7/S8 at-scale variant: a delete index saved bucketed+sorted by
     delete_key must sort-merge-join with no Exchange on the index side
     (only the query-key side shuffles) — the broadcast-free lookup plan
@@ -71,9 +72,8 @@ def test_bucketed_index_join_skips_index_exchange(spark, tmp_path):
         loaded = SparkDictionary.load_bucketed(spark, "ps_bucketed_dict")
         assert loaded.config.prefix_length == d.config.prefix_length
         q = spark.createDataFrame([("steems",), ("steamz",)], "query string")
-        out = lookup_batch_relational(
-            q, loaded, Verbosity.TOP, broadcast_index=False
-        )
+        with relational_route():
+            out = lookup_batch_relational(q, loaded, Verbosity.TOP)
         plan = _physical(out)
         assert "SelectedBucketsCount" in plan, plan
         # results identical to the routed (worker-local) engine
@@ -173,7 +173,7 @@ def test_hash_stratified_sample_is_shuffle_free(spark):
     assert "PythonUDF" not in plan and "ArrowEval" not in plan, plan
 
 
-def test_fuzzy_segmentation_default_plan_is_join_free(spark):
+def test_fuzzy_segmentation_default_plan_is_join_free(spark, relational_route):
     """The worker-local fuzzy path must not plan any join or
     per-substring relation: one MapInPandas over (doc_id, phrase) rows,
     at most a round-robin repartition."""
@@ -187,13 +187,12 @@ def test_fuzzy_segmentation_default_plan_is_join_free(spark):
     plan = _physical(word_segmentation_batch(docs, d, max_edit_distance=1))
     assert "Join" not in plan, plan
     assert "MapInPandas" in plan, plan
-    rel_plan = _physical(
-        word_segmentation_batch(docs, d, max_edit_distance=1, strategy="relational")
-    )
+    with relational_route():
+        rel_plan = _physical(word_segmentation_batch(docs, d, max_edit_distance=1))
     assert "Join" in rel_plan  # the fallback shape really is relational
 
 
-def test_compound_default_plan_is_join_free(spark):
+def test_compound_default_plan_is_join_free(spark, relational_route):
     """The worker-local lookup_compound kernel must plan no token
     explode, no LUT joins and no per-document groupBy: one MapInPandas
     over (doc_id, phrase, token arrays), at most a repartition."""
@@ -208,11 +207,8 @@ def test_compound_default_plan_is_join_free(spark):
     assert "Join" not in plan, plan
     assert "FlatMapGroupsInPandas" not in plan, plan
     assert "MapInPandas" in plan, plan
-    rel_plan = _physical(
-        lookup_compound_batch(
-            docs, d, max_edit_distance=1, strategy="relational"
-        )
-    )
+    with relational_route():
+        rel_plan = _physical(lookup_compound_batch(docs, d, max_edit_distance=1))
     assert "Join" in rel_plan  # the fallback shape really is relational
 
 

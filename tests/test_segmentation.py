@@ -1,6 +1,7 @@
 """word_segmentation parity (reference tests/test_symspellpy_word_segmentation.py,
 fixture tests/fortests/word_segmentation_data.json)."""
 
+import contextlib
 import json
 
 import pytest
@@ -87,7 +88,7 @@ def test_empty_doc(spark):
     assert got[1]["corrected_string"] == ""
 
 
-def test_null_and_empty_docs_every_route(spark):
+def test_null_and_empty_docs_every_route(spark, relational_route):
     """A null text gets the same empty Composition as an empty one, on
     the d=0 and fuzzy worker-local routes and the relational shape."""
     words = spark.createDataFrame(
@@ -101,16 +102,19 @@ def test_null_and_empty_docs_every_route(spark):
     cols = ["doc_id", "segmented_string", "corrected_string", "distance_sum",
             "log_prob_sum"]
     for dist in (0, 1):
-        for strategy in ("auto", "relational"):
-            got = {
-                r[0]: tuple(r[1:])
-                for r in word_segmentation_batch(
-                    docs, d, max_edit_distance=dist, strategy=strategy
-                ).select(cols).collect()
-            }
-            assert sorted(got) == [1, 2, 3], (dist, strategy)
-            assert got[1][:3] == ("the cat", "the cat", 1), (dist, strategy)
-            assert got[2] == empty and got[3] == empty, (dist, strategy)
+        for name, ctx in (
+            ("local", contextlib.nullcontext), ("relational", relational_route)
+        ):
+            with ctx():
+                got = {
+                    r[0]: tuple(r[1:])
+                    for r in word_segmentation_batch(
+                        docs, d, max_edit_distance=dist
+                    ).select(cols).collect()
+                }
+            assert sorted(got) == [1, 2, 3], (dist, name)
+            assert got[1][:3] == ("the cat", "the cat", 1), (dist, name)
+            assert got[2] == empty and got[3] == empty, (dist, name)
 
 
 @pytest.mark.slow
@@ -151,7 +155,7 @@ def test_live_parity_d0_fast_path(spark, en_dict2, reference_symspell_module):
     assert got[0]["distance_sum"] == exp.distance_sum
 
 
-def test_fuzzy_strategies_agree(spark, en_dict2):
+def test_fuzzy_strategies_agree(spark, en_dict2, relational_route):
     """The broadcast-LUT fuzzy path and the relational cell-join path
     must be bit-identical (same lookup_batch LUT, same DP)."""
     docs = spark.createDataFrame(
@@ -173,16 +177,17 @@ def test_fuzzy_strategies_agree(spark, en_dict2):
                 docs, en_dict2, max_edit_distance=dd
             ).collect()
         }
-        rel = {
-            r["doc_id"]: tuple(r[c] for c in cols[1:])
-            for r in word_segmentation_batch(
-                docs, en_dict2, max_edit_distance=dd, strategy="relational"
-            ).collect()
-        }
+        with relational_route():
+            rel = {
+                r["doc_id"]: tuple(r[c] for c in cols[1:])
+                for r in word_segmentation_batch(
+                    docs, en_dict2, max_edit_distance=dd
+                ).collect()
+            }
         assert fast == rel, dd
 
 
-def test_fuzzy_ignore_pattern_strategies_agree(spark, en_dict2):
+def test_fuzzy_ignore_pattern_strategies_agree(spark, en_dict2, relational_route):
     """ignore_pattern must behave identically in the worker-local and
     relational fuzzy paths (exact-hit-beats-ignore ordering included)."""
     docs = spark.createDataFrame(
@@ -195,12 +200,11 @@ def test_fuzzy_ignore_pattern_strategies_agree(spark, en_dict2):
         r["doc_id"]: tuple(r[c] for c in cols)
         for r in word_segmentation_batch(docs, en_dict2, **kw).collect()
     }
-    rel = {
-        r["doc_id"]: tuple(r[c] for c in cols)
-        for r in word_segmentation_batch(
-            docs, en_dict2, strategy="relational", **kw
-        ).collect()
-    }
+    with relational_route():
+        rel = {
+            r["doc_id"]: tuple(r[c] for c in cols)
+            for r in word_segmentation_batch(docs, en_dict2, **kw).collect()
+        }
     assert fast == rel
 
 
