@@ -62,12 +62,6 @@ def main(argv=None) -> None:
         help="add the winnowing (MOSS) local-match sweep to candidate sources",
     )
     ap.add_argument("--winnow-k", type=int, default=8)
-    ap.add_argument(
-        "--no-fuse-candidates",
-        action="store_true",
-        help="disable the fused substring/exact candidate sources "
-        "(legacy per-source text scans)",
-    )
     ap.add_argument("--winnow-window", type=int, default=4)
     ap.add_argument("--cores", default=None)
     args = ap.parse_args(argv)
@@ -93,7 +87,6 @@ def main(argv=None) -> None:
         use_winnowing=args.use_winnowing,
         winnow_k=args.winnow_k,
         winnow_window=args.winnow_window,
-        fuse_candidates=not args.no_fuse_candidates,
     )
     pipe = DedupPipeline(spark, cfg, checkpoint_dir=args.checkpoint)
     t0 = time.perf_counter()

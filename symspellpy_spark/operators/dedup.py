@@ -33,13 +33,12 @@ from symspellpy_spark.operators.scoped_cache import persist_scoped
 __all__ = [
     "winnowing_fingerprints",
     "winnowing_candidate_pairs",
-    "text_to_shingle_hashes",
     "pack_hashes",
     "unpack_hashes",
     "normalized_tokens",
     "shingles",
-    "combined_signatures",
-    "tokens_to_signatures",
+    "kernel_tokens",
+    "token_correction_map",
     "text_to_signatures",
     "minhash_signatures",
     "lsh_candidate_pairs",
@@ -66,9 +65,11 @@ def normalized_tokens(
 ) -> DataFrame:
     """(id, tokens array<string>) — whitespace/word tokenization, lowered.
 
-    The dictionary-correction variant (SymSpell normalization of noisy
-    tokens before shingling) lives in plans/pipeline.py where a
-    dictionary is in scope.
+    The JVM regexp tokenizer of the standalone operators. The pipeline
+    tokenizes inside :func:`text_to_signatures` instead, and corrects
+    noisy tokens there too (:func:`kernel_tokens`,
+    :func:`token_correction_map`); on ASCII text the two tokenizers
+    agree.
     """
     src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
     return docs.select(
@@ -269,37 +270,6 @@ def minhash_signatures(
     return df.withColumn("minhash", _minhash(F.col(hashes_col)))
 
 
-def combined_signatures(
-    df: DataFrame,
-    num_perm: int = 128,
-    seed: int = 1337,
-    hashes_col: str = "shingle_hashes",
-) -> DataFrame:
-    """Add ``minhash array<long>`` AND ``simhash long`` in ONE fused
-    pandas UDF — a single Arrow crossing for the (wide) shingle-hash
-    arrays instead of two chained UDF stages. Semantics identical to
-    minhash_signatures + simhash_signatures(hashes_col=...).
-    """
-    from pyspark.sql.types import StructField, StructType
-
-    a, b = _minhash_params(num_perm, seed)
-    out_type = StructType(
-        [
-            StructField("minhash", ArrayType(LongType())),
-            StructField("simhash", LongType()),
-        ]
-    )
-
-    @F.pandas_udf(out_type)
-    def _sig(hashes: pd.Series) -> pd.DataFrame:
-        mh, sh = _sig_kernel(hashes, num_perm, a, b)
-        return pd.DataFrame({"minhash": list(mh.tolist()), "simhash": sh})
-
-    return df.withColumn("_sig", _sig(F.col(hashes_col))).select(
-        "*", F.col("_sig.minhash").alias("minhash"), F.col("_sig.simhash").alias("simhash")
-    ).drop("_sig")
-
-
 def _fmix64(h: np.ndarray) -> np.ndarray:
     """murmur3 64-bit finalizer, vectorized (uint64 in/out).
 
@@ -376,88 +346,6 @@ class _PolyPrefix:
         return (T[e] - T[s]) * self.pow_at(s)
 
 
-def tokens_to_signatures(
-    tokens: DataFrame,
-    k: int = 5,
-    num_perm: int = 128,
-    seed: int = 1337,
-    id_col: str = "id",
-    tokens_col: str = "tokens",
-    n_bands: int | None = None,
-    shingles_only: bool = False,
-    emit_shingles: bool = True,
-    pack_minhash: bool = False,
-) -> DataFrame:
-    """(id, shingle_hashes, minhash, simhash) in ONE Arrow pass.
-
-    The fused signature stage of the dedup pipeline: token hashing,
-    k-shingle hashing, per-doc dedup, MinHash and SimHash all run in
-    numpy over the *raw Arrow buffers* of the tokens column
-    (``mapInArrow``; the utf8 data buffer and offsets are read
-    zero-copy — no per-token Python objects are ever created).
-
-    Replaces the JVM formulation (transform/slice/xxhash64 per window):
-    higher-order Spark expressions are interpreted, allocating per-window
-    objects; at ~30M windows/task the JVM allocation rate throttles
-    every concurrent core (measured: 4x task-CPU inflation going 4->16
-    local cores). Here the same work is ~10 linear numpy passes.
-
-    Docs with fewer than k tokens get one whole-doc shingle; docs with 0
-    tokens get an empty shingle set, the empty-minhash sentinel, simhash
-    0 and an EMPTY bands list (so they never enter any LSH bucket).
-
-    With ``n_bands`` set, a ``bands array<long>`` column (one random-
-    weighted hash per num_perm/n_bands-slot band, nonlinearly finalized)
-    is emitted so candidate generation can read a ~40x narrower relation
-    than the minhash itself — RDD-level checkpoints do not column-prune,
-    so every byte in the signature row is paid by every downstream scan.
-    """
-    siggen = _SignatureGen(
-        k, num_perm, seed, n_bands, shingles_only, emit_shingles, pack_minhash
-    )
-
-    def _batches(it):
-        import pyarrow as pa
-
-        for rb in it:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ids = rb.column(0)
-            toks = rb.column(1)
-            # null token lists (null text upstream) read as empty docs:
-            # Spark's Arrow writer emits equal offsets for null slots
-            l_off = toks.offsets.to_numpy().astype(np.int64)  # n+1 into values
-            vals = toks.values
-            off_dtype = (
-                np.int64 if pa.types.is_large_string(vals.type) else np.int32
-            )
-            vo_raw = np.frombuffer(vals.buffers()[1], dtype=off_dtype)
-            v_off = vo_raw[vals.offset : vals.offset + len(vals) + 1].astype(
-                np.int64
-            )
-            data = np.frombuffer(vals.buffers()[2], dtype=np.uint8)
-            t0, t1 = int(l_off[0]), int(l_off[-1])
-            tok_starts = v_off[t0:t1]
-            tok_ends = v_off[t0 + 1 : t1 + 1]
-            b0 = int(tok_starts[0]) if t1 > t0 else 0
-            b1 = int(tok_ends[-1]) if t1 > t0 else 0
-            # hash every token: byte-level polynomial + length mix
-            T1 = siggen.tok_poly.prefix(data[b0:b1])
-            z = siggen.tok_poly.slice_hash(T1, tok_starts - b0, tok_ends - b0)
-            z ^= (tok_ends - tok_starts).astype(np.uint64) << np.uint64(1)
-            z = _fmix64(z)
-            d_start = l_off - t0  # per-doc token offsets, 0-based
-            yield siggen.batch_from_token_hashes(ids, z, d_start)
-
-    schema = _sig_schema(
-        tokens, id_col, n_bands, shingles_only, emit_shingles, pack_minhash
-    )
-    return tokens.select(
-        F.col(id_col).alias("id"), F.col(tokens_col).alias("tokens")
-    ).mapInArrow(_batches, schema)
-
-
 def _sig_schema(
     df: DataFrame,
     id_col: str,
@@ -488,7 +376,7 @@ def _sig_schema(
 
 
 class _SignatureGen:
-    """Shared tail of the fused signature kernels: token hashes ->
+    """Tail of the fused signature kernel: token hashes ->
     shingle hashes -> per-doc dedup -> MinHash/SimHash/band hashes ->
     output RecordBatch."""
 
@@ -671,6 +559,115 @@ _WORD_BYTE[ord("'")] = True
 _WORD_BYTE[0x80:] = True
 
 
+def _utf8_slab(txt) -> tuple[np.ndarray, np.ndarray]:
+    """A (large_)string Arrow array -> (its utf8 bytes, int64 (n+1)
+    per-row offsets into them), zero-copy; null rows read as empty
+    (Spark's Arrow writer emits equal offsets for null slots)."""
+    import pyarrow as pa
+
+    off_dtype = np.int64 if pa.types.is_large_string(txt.type) else np.int32
+    to_raw = np.frombuffer(txt.buffers()[1], dtype=off_dtype)
+    t_off = to_raw[txt.offset : txt.offset + len(txt) + 1].astype(np.int64)
+    data = np.frombuffer(txt.buffers()[2], dtype=np.uint8)
+    b0, b1 = int(t_off[0]), int(t_off[-1])
+    return data[b0:b1], t_off - b0
+
+
+def _tokenize(raw: np.ndarray, bounds: np.ndarray):
+    """The kernel's byte tokenizer over a non-empty batch of docs.
+
+    ``raw``: the docs' utf8 bytes; ``bounds``: int64 (n+1) doc start
+    offsets into it (and the total end). Returns (ASCII-lowercased copy
+    of ``raw``, token start offsets, token end offsets): tokens are the
+    runs of ``_WORD_BYTE`` bytes, found with boolean-mask shifts, and
+    never span two documents. A byte >= 0x80 is a word byte, so a token
+    never splits a multi-byte character."""
+    buf = raw.copy()
+    upper = (buf >= 65) & (buf <= 90)
+    buf[upper] |= 0x20
+    wordish = _WORD_BYTE[buf]
+    prev = np.empty_like(wordish)
+    prev[0] = False
+    prev[1:] = wordish[:-1]
+    nxt = np.empty_like(wordish)
+    nxt[-1] = False
+    nxt[:-1] = wordish[1:]
+    inner = bounds[(bounds > 0) & (bounds < buf.size)]
+    prev[inner] = False
+    nxt[inner - 1] = False
+    tok_starts = np.flatnonzero(wordish & ~prev)
+    tok_ends = np.flatnonzero(wordish & ~nxt) + 1
+    return buf, tok_starts, tok_ends
+
+
+def _token_hashes(
+    poly: _PolyPrefix, buf: np.ndarray, starts: np.ndarray, ends: np.ndarray
+) -> np.ndarray:
+    """uint64 hash of each token ``buf[starts[i]:ends[i]]``: a byte-level
+    polynomial plus a length mix, nonlinearly finalized."""
+    T1 = poly.prefix(buf)
+    z = poly.slice_hash(T1, starts, ends)
+    z ^= (ends - starts).astype(np.uint64) << np.uint64(1)
+    return _fmix64(z)
+
+
+def kernel_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """``(query string)``: the tokens :func:`text_to_signatures` hashes,
+    from one Arrow pass with the kernel's own byte tokenizer, distinct
+    within each Arrow batch (not globally).
+
+    The query side of the pipeline's SymSpell token correction, so the
+    tokens looked up are exactly the tokens that get hashed."""
+
+    def _batches(it):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for rb in it:
+            txt = rb.column(0)
+            raw, bounds = _utf8_slab(txt)
+            if raw.size == 0:
+                continue
+            buf, starts, ends = _tokenize(raw, bounds)
+            # tokens are the maximal word-byte runs, so the word bytes in
+            # order are the tokens concatenated
+            offs = np.zeros(starts.size + 1, dtype=np.int64)
+            np.cumsum(ends - starts, out=offs[1:])
+            toks = pa.Array.from_buffers(
+                pa.large_string(),
+                starts.size,
+                [None, pa.py_buffer(offs), pa.py_buffer(buf[_WORD_BYTE[buf]])],
+            )
+            yield pa.RecordBatch.from_arrays(
+                [pc.unique(toks).cast(txt.type)], names=["query"]
+            )
+
+    return docs.select(F.col(text_col).alias("text")).mapInArrow(
+        _batches, "query string"
+    )
+
+
+def token_correction_map(
+    corrections: list[tuple[str, str]],
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(token, corrected)`` pairs -> the ``token_map`` of
+    :func:`text_to_signatures`: the kernel hashes of the tokens, sorted,
+    and aligned with them the kernel hashes of their corrections."""
+    poly = _PolyPrefix(_TOK_BASE)
+
+    def hashes(words: list[str]) -> np.ndarray:
+        raw = [w.encode() for w in words]
+        lens = np.array([len(b) for b in raw], dtype=np.int64)
+        ends = np.cumsum(lens)
+        buf = np.frombuffer(b"".join(raw), dtype=np.uint8)
+        return _token_hashes(poly, buf, ends - lens, ends)
+
+    src = hashes([t for t, _ in corrections])
+    dst = hashes([c for _, c in corrections])
+    order = np.argsort(src)
+    return src[order], dst[order]
+
+
 def text_to_signatures(
     docs: DataFrame,
     k: int = 5,
@@ -685,18 +682,36 @@ def text_to_signatures(
     substring_gram_len: int | None = None,
     substring_sample_mod: int = 16,
     emit_text_hash: bool = False,
+    token_map: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """(id, shingle_hashes, minhash, simhash[, bands]) straight from raw
-    text — tokenization included in the Arrow kernel.
+    text in ONE Arrow pass: tokenization, token hashing, k-shingle
+    hashing, per-doc dedup, MinHash and SimHash all run in numpy.
 
-    Same output contract and hash values as
-    ``normalized_tokens -> tokens_to_signatures`` wherever the byte
-    tokenizer agrees with the regexp tokenizer (always, for ASCII text;
-    see ``_WORD_BYTE``), but the 10-100x larger token-string relation
-    never exists: no JVM regexp garbage, no per-token Arrow
-    serialization — the kernel reads the utf8 data buffer zero-copy,
-    lowercases ASCII in one vectorized pass and finds token runs with
-    boolean-mask shifts.
+    The kernel reads the utf8 data buffer zero-copy, lowercases ASCII in
+    one vectorized pass and finds token runs with boolean-mask shifts
+    (see ``_tokenize``), so a token-string relation (10-100x the text
+    bytes) never exists: no JVM regexp garbage, no per-token Arrow
+    serialization. Its tokens are those of :func:`normalized_tokens`
+    wherever the byte tokenizer agrees with the regexp tokenizer
+    (always, for ASCII text; see ``_WORD_BYTE``).
+
+    Docs with fewer than k tokens get one whole-doc shingle; docs with 0
+    tokens get an empty shingle set, the empty-minhash sentinel, simhash
+    0 and an EMPTY bands list (so they never enter any LSH bucket).
+
+    With ``n_bands`` set, a ``bands array<long>`` column (one random-
+    weighted hash per num_perm/n_bands-slot band, nonlinearly finalized)
+    is emitted so candidate generation can read a ~40x narrower relation
+    than the minhash itself — RDD-level checkpoints do not column-prune,
+    so every byte in the signature row is paid by every downstream scan.
+
+    ``token_map``: ``(src, dst)`` uint64 arrays from
+    :func:`token_correction_map`, ``src`` sorted. Every token whose hash
+    is in ``src`` is hashed as its correction instead, before shingling
+    (the pipeline's SymSpell token correction). The arrays travel in
+    the kernel's pickled command, which Spark ships as a broadcast once
+    it exceeds ``spark.broadcast.UDFCompressionThreshold`` (1 MB).
 
     Fused candidate-source columns (so the pipeline's candidate
     generation never re-scans text):
@@ -756,52 +771,26 @@ def text_to_signatures(
             if n == 0:
                 continue
             ids = rb.column(0)
-            txt = rb.column(1)
-            off_dtype = (
-                np.int64 if pa.types.is_large_string(txt.type) else np.int32
-            )
-            to_raw = np.frombuffer(txt.buffers()[1], dtype=off_dtype)
-            t_off = to_raw[txt.offset : txt.offset + n + 1].astype(np.int64)
-            data = np.frombuffer(txt.buffers()[2], dtype=np.uint8)
-            b0, b1 = int(t_off[0]), int(t_off[-1])
-            if b1 == b0:  # every doc empty/null
+            raw, bounds = _utf8_slab(rb.column(1))
+            if raw.size == 0:  # every doc empty/null
                 yield siggen.batch_from_token_hashes(
                     ids,
                     np.empty(0, dtype=np.uint64),
                     np.zeros(n + 1, dtype=np.int64),
-                    extras=extras_of(
-                        np.empty(0, dtype=np.uint8),
-                        np.zeros(n + 1, dtype=np.int64),
-                    ),
+                    extras=extras_of(raw, bounds),
                 )
                 continue
-            buf = data[b0:b1].copy()
-            # ASCII lowercase in place
-            upper = (buf >= 65) & (buf <= 90)
-            buf[upper] |= 0x20
-            wordish = _WORD_BYTE[buf]
-            # token runs, broken at doc boundaries
-            prev = np.empty_like(wordish)
-            prev[0] = False
-            prev[1:] = wordish[:-1]
-            nxt = np.empty_like(wordish)
-            nxt[-1] = False
-            nxt[:-1] = wordish[1:]
-            bounds = t_off - b0  # doc start byte positions (and total end)
-            inner = bounds[(bounds > 0) & (bounds < buf.size)]
-            prev[inner] = False  # a token never spans two documents
-            nxt[inner - 1] = False
-            tok_starts = np.flatnonzero(wordish & ~prev)
-            tok_ends = np.flatnonzero(wordish & ~nxt) + 1
-            # token hashes (identical formula to tokens_to_signatures)
-            T1 = siggen.tok_poly.prefix(buf)
-            z = siggen.tok_poly.slice_hash(T1, tok_starts, tok_ends)
-            z ^= (tok_ends - tok_starts).astype(np.uint64) << np.uint64(1)
-            z = _fmix64(z)
+            buf, tok_starts, tok_ends = _tokenize(raw, bounds)
+            z = _token_hashes(siggen.tok_poly, buf, tok_starts, tok_ends)
+            if token_map is not None and token_map[0].size:
+                src, dst = token_map
+                idx = np.minimum(np.searchsorted(src, z), src.size - 1)
+                hit = src[idx] == z
+                z[hit] = dst[idx[hit]]
             # per-doc token offsets
             d_start = np.searchsorted(tok_starts, bounds, side="left")
             yield siggen.batch_from_token_hashes(
-                ids, z, d_start, extras=extras_of(data[b0:b1], bounds)
+                ids, z, d_start, extras=extras_of(raw, bounds)
             )
 
     schema = _sig_schema(
@@ -817,26 +806,6 @@ def text_to_signatures(
     return docs.select(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
     ).mapInArrow(_batches, schema)
-
-
-def text_to_shingle_hashes(
-    docs: DataFrame,
-    k: int = 5,
-    id_col: str = "id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, shingle_hashes) — the fused kernel's shingle sets alone.
-
-    The verify-phase-2 re-derivation used when signature checkpoints
-    drop the fat ``shingle_hashes`` column (DedupConfig
-    checkpoint_shingles=False): one tokenize+shingle Arrow pass over
-    text, no MinHash/SimHash/band work. Hash-identical to the
-    ``shingle_hashes`` the full kernel emits (same code path), and
-    independent of (num_perm, seed), which only parameterize MinHash.
-    """
-    return text_to_signatures(
-        docs, k=k, id_col=id_col, text_col=text_col, shingles_only=True
-    )
 
 
 def pack_hashes(col: "F.Column") -> "F.Column":
@@ -1032,7 +1001,7 @@ def lsh_candidate_pairs(
     ``salted_bucket_cap`` extends them a salted-repartitioning tier
     (see :func:`_bucket_pairs`); pairs reached in several bands are
     deduplicated. Pass ``bands_col`` when the signature relation
-    carries precomputed band hashes (see :func:`tokens_to_signatures`)
+    carries precomputed band hashes (see :func:`text_to_signatures`)
     — candidate generation then never touches the num_perm-wide
     minhash column.
 

@@ -1,10 +1,16 @@
 """End-to-end near-duplicate detection + clustering pipeline.
 
-The north-star job (BASELINE.json): pages -> token normalization
-(SymSpell delete-key correction of noisy tokens) -> shingles ->
-signatures (MinHash + SimHash) -> candidate pairs (LSH bands ∪ SimHash
+The north-star job (BASELINE.json): pages -> one fused Arrow kernel
+(``text_to_signatures``: tokens, shingles, MinHash, SimHash, LSH bands,
+substring grams, text hash) -> candidate pairs (LSH bands ∪ SimHash
 Hamming ∪ substring fingerprints ∪ exact-hash) -> exact-Jaccard verify
--> hash-min connected components -> clusters.
+-> connected components -> clusters.
+
+Passing a ``dictionary`` turns on SymSpell token correction: the
+kernel's distinct tokens are resolved once with ``lookup_batch`` TOP
+(worker-local or relational, as ``neighborhood.route`` picks), and the
+kernel hashes each corrected token as its correction, in the signature
+pass and in verify's shingle re-derivation alike.
 
 Checkpointing: ``signatures`` and ``edges`` are written as parquet
 checkpoint tables (Iceberg-shaped: data + a properties JSON carrying
@@ -26,20 +32,18 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from symspellpy_spark.config import EngineConfig, Verbosity
+from symspellpy_spark.config import DistanceAlgorithm, EngineConfig, Verbosity
 from symspellpy_spark.operators.cluster import connected_components
 from symspellpy_spark.operators.dedup import (
-    exact_duplicates,
     exact_duplicates_from_hash,
     jaccard_verify,
+    kernel_tokens,
     lsh_candidate_pairs,
-    minhash_signatures,
-    normalized_tokens,
-    shingles,
     simhash_candidate_pairs,
-    simhash_signatures,
-    substring_fingerprint_pairs,
     substring_pairs_from_grams,
+    text_to_signatures,
+    token_correction_map,
+    unpack_hashes,
     winnowing_candidate_pairs,
 )
 from symspellpy_spark.operators.dictionary import SparkDictionary
@@ -89,8 +93,15 @@ class DedupConfig:
     n_salt: int = 8
     # winnowing local-match sweep (MOSS fingerprints): off by default —
     # LSH + SimHash + substring already cover whole-doc near-dups; turn
-    # on to also catch PARTIAL overlap (a shared section >= 
-    # winnow_window + winnow_k - 1 chars guarantees a candidate pair)
+    # on to also catch PARTIAL overlap (a shared section >=
+    # winnow_window + winnow_k - 1 chars guarantees a candidate pair).
+    # Winnowing is deliberately NOT fused into the signature kernel: its
+    # fingerprint density is 2/(winnow_window+1) per character — ~1.8-3.2
+    # BYTES of int64 fingerprints per text byte at the shipped configs —
+    # so carrying them on the signatures relation would make every
+    # signature checkpoint/localCheckpoint 2-3x wider than the text it
+    # summarizes to save one scan; its own doc-local kernel pass is the
+    # cheaper shape at any scale where the checkpoint is ever written.
     use_winnowing: bool = False
     winnow_k: int = 8
     winnow_window: int = 4
@@ -104,25 +115,6 @@ class DedupConfig:
     # re-reads are nearly free, so re-deriving would only cost.
     checkpoint_shingles: bool = False
     checkpoint_codec: str = "zstd"
-    # True (default): the signature kernel also emits the substring
-    # sample grams (sub_grams) and a 64-bit full-text content hash
-    # (text_hash), and candidate generation derives the substring +
-    # exact sources from the signatures relation instead of re-scanning
-    # text. The batch path then reads corpus text exactly ONCE (the
-    # signature pass; narrow-checkpoint runs add the survivors-only
-    # shingle re-derive at verify, and winnowing — if enabled — its own
-    # kernel pass). Only the common text_to_signatures path fuses; the
-    # normalize_tokens path keeps the legacy per-source scans.
-    # Winnowing is deliberately NOT fused: its fingerprint density is
-    # 2/(winnow_window+1) per character — ~1.8-3.2 BYTES of int64
-    # fingerprints per text byte at the shipped configs — so carrying
-    # them on the signatures relation would make every signature
-    # checkpoint/localCheckpoint 2-3x wider than the text it summarizes
-    # to save one scan; the dedicated doc-local kernel pass is the
-    # cheaper shape at any scale where the checkpoint is ever written.
-    fuse_candidates: bool = True
-    normalize_tokens: bool = False
-    normalize_min_count: int = 0  # only correct tokens rarer than this
     engine: EngineConfig = field(default_factory=EngineConfig)
 
     def to_json(self) -> str:
@@ -151,6 +143,8 @@ class DedupPipeline:
         self.checkpoint_dir = checkpoint_dir
         self.metrics: list[dict] = []
         self._memo: dict[str, DataFrame] = {}
+        self._token_map_memo = None
+        self._dictionary_digest_memo = None
         if checkpoint_dir is not None:
             from symspellpy_spark.sources.catalog import TableCatalog
 
@@ -169,8 +163,13 @@ class DedupPipeline:
         if self._catalog is None:
             return None
         props = self._catalog.properties(stage)
-        if props is None or props.get("config") != self.config.to_json():
-            # absent or config changed -> checkpoint invalid; recompute
+        if (
+            props is None
+            or props.get("config") != self.config.to_json()
+            or props.get("dictionary") != self._dictionary_digest()
+        ):
+            # absent, or config or dictionary changed -> checkpoint
+            # invalid; recompute
             return None
         self._metric(stage, "resumed_from_checkpoint", 1)
         return self._catalog.load(stage)
@@ -181,9 +180,38 @@ class DedupPipeline:
         return self._catalog.save(
             df,
             stage,
-            {"config": self.config.to_json(), "stage": stage},
+            {
+                "config": self.config.to_json(),
+                "dictionary": self._dictionary_digest(),
+                "stage": stage,
+            },
             compression=self.config.checkpoint_codec,
         )
+
+    def _dictionary_digest(self) -> str:
+        """What the correcting dictionary contributes to a checkpoint's
+        validity: "none" without one, else a digest of its ``(term,
+        count)`` rows and lookup settings — one aggregate job, once per
+        pipeline."""
+        if self.dictionary is None:
+            return "none"
+        if self._dictionary_digest_memo is None:
+            # order-independent aggregates over the (distinct) terms
+            row = self.dictionary.words.agg(
+                F.count(F.lit(1)),
+                F.bit_xor(F.xxhash64("term", "count")),
+                F.sum(F.hash("term", "count").cast("long")),
+            ).first()
+            cfg = self.dictionary.config
+            self._dictionary_digest_memo = json.dumps(
+                [
+                    *row,
+                    DistanceAlgorithm(cfg.distance_algorithm).value,
+                    cfg.max_dictionary_edit_distance,
+                    cfg.prefix_length,
+                ]
+            )
+        return self._dictionary_digest_memo
 
     def _metric_count(
         self, stage: str, df: DataFrame, sources: list[str] | None = None
@@ -257,44 +285,35 @@ class DedupPipeline:
     def _id_map(self, pages: DataFrame) -> DataFrame:
         return self._pages64(pages).select("id", "url")
 
-    def tokens(self, pages: DataFrame) -> DataFrame:
-        toks = normalized_tokens(
-            self._pages64(pages), id_col="id", text_col="text"
-        )
-        if self.config.normalize_tokens and self.dictionary is not None:
-            toks = self._symspell_normalize(toks)
-        return toks
+    def _token_map(self, pages: DataFrame):
+        """The SymSpell token correction the signature kernel applies
+        (``text_to_signatures``' ``token_map``), or None without a
+        dictionary.
 
-    def _symspell_normalize(self, toks: DataFrame) -> DataFrame:
-        """Correct noisy tokens with the delete-key index before shingling
-        (the north star's rebirth of SymSpell as candidate-generation).
-
-        Only out-of-vocabulary tokens are corrected; the token -> corrected
-        mapping is computed ONCE over distinct tokens and broadcast back.
-        """
-        distinct = toks.select(F.explode("tokens").alias("query")).distinct()
-        oov = distinct.join(
-            self.dictionary.words.select(F.col("term").alias("query")),
-            "query",
-            "left_anti",
-        )
-        corrections = lookup_batch(
-            oov, self.dictionary, Verbosity.TOP
-        ).select(F.col("query").alias("tok"), F.col("term").alias("corrected"))
-        cmap = F.broadcast(corrections)
-        exploded = toks.select(
-            "id", F.posexplode("tokens").alias("pos", "tok")
-        ).join(cmap, "tok", "left")
-        return exploded.groupBy("id").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("pos", F.coalesce("corrected", "tok").alias("t"))
-                    )
-                ),
-                lambda s: s["t"],
-            ).alias("tokens")
-        )
+        Built on first use, once per pipeline: the kernel tokenizer's
+        distinct tokens, resolved with ``lookup_batch`` TOP (so
+        ``neighborhood.route`` picks the worker-local or the relational
+        engine), keeping each token whose suggestion differs from it.
+        In-vocabulary tokens suggest themselves at distance 0 and drop
+        out; tokens with no suggestion stay as they are."""
+        if self.dictionary is None:
+            return None
+        if self._token_map_memo is None:
+            rows = (
+                lookup_batch(
+                    kernel_tokens(self._pages64(pages)),
+                    self.dictionary,
+                    Verbosity.TOP,
+                )
+                .where(F.col("term") != F.col("query"))
+                .select("query", "term")
+                .collect()
+            )
+            self._token_map_memo = token_correction_map(
+                [(r["query"], r["term"]) for r in rows]
+            )
+            self._metric("signatures", "corrected_tokens", len(rows))
+        return self._token_map_memo
 
     def signatures(self, pages: DataFrame) -> DataFrame:
         if "signatures" in self._memo:
@@ -304,11 +323,7 @@ class DedupPipeline:
             cached = self._unpack_sig(cached)
             self._memo["signatures"] = cached
             return cached
-        from symspellpy_spark.operators.dedup import (
-            text_to_signatures,
-            tokens_to_signatures,
-        )
-
+        c = self.config
         # narrow persisted relation (default): shingle_hashes is the
         # majority of signature bytes and its ONLY consumer is verify
         # phase 2 (which re-derives it for estimate survivors), and
@@ -324,42 +339,27 @@ class DedupPipeline:
         # saves nothing on the in-memory signatures stage
         narrow = (
             self.checkpoint_dir is not None
-            and not self.config.checkpoint_shingles
+            and not c.checkpoint_shingles
         )
-        narrow_kw = (
-            {"emit_shingles": False, "pack_minhash": True} if narrow else {}
+        # the kernel also emits the substring sample grams (sub_grams)
+        # and a 64-bit full-text content hash (text_hash): candidate
+        # generation derives the substring + exact sources from the
+        # signatures relation, so the batch path reads corpus text ONCE
+        # (plus the survivors-only shingle re-derive of narrow-checkpoint
+        # runs and winnowing's own pass, if enabled)
+        sig = text_to_signatures(
+            self._pages64(pages),
+            k=c.shingle_k,
+            num_perm=c.num_perm,
+            seed=c.minhash_seed,
+            n_bands=c.bands,
+            emit_shingles=not narrow,
+            pack_minhash=narrow,
+            substring_gram_len=c.substring_gram_len,
+            substring_sample_mod=c.substring_sample_mod,
+            emit_text_hash=True,
+            token_map=self._token_map(pages),
         )
-        if self.config.normalize_tokens and self.dictionary is not None:
-            # dictionary-corrected tokens exist as a real relation
-            sig = tokens_to_signatures(
-                self.tokens(pages),
-                k=self.config.shingle_k,
-                num_perm=self.config.num_perm,
-                seed=self.config.minhash_seed,
-                n_bands=self.config.bands,
-                **narrow_kw,
-            )
-        else:
-            # common path: tokenize inside the signature kernel — the
-            # token-string relation (10-100x the text bytes) never exists
-            fuse_kw = (
-                {
-                    "substring_gram_len": self.config.substring_gram_len,
-                    "substring_sample_mod": self.config.substring_sample_mod,
-                    "emit_text_hash": True,
-                }
-                if self.config.fuse_candidates
-                else {}
-            )
-            sig = text_to_signatures(
-                self._pages64(pages),
-                k=self.config.shingle_k,
-                num_perm=self.config.num_perm,
-                seed=self.config.minhash_seed,
-                n_bands=self.config.bands,
-                **narrow_kw,
-                **fuse_kw,
-            )
         if self.checkpoint_dir is None:
             sig = sig.localCheckpoint(eager=False)
         sig = self._save_ckpt("signatures", sig)
@@ -371,15 +371,13 @@ class DedupPipeline:
     def _unpack_sig(self, sig: DataFrame) -> DataFrame:
         if "minhash_bin" not in sig.columns:
             return sig
-        from symspellpy_spark.operators.dedup import unpack_hashes
-
         return sig.select(
             "id",
             unpack_hashes(F.col("minhash_bin")).alias("minhash"),
             "simhash",
             "bands",
-            # fused candidate-source columns ride along when present
-            *[c for c in ("sub_grams", "text_hash") if c in sig.columns],
+            "sub_grams",
+            "text_hash",
         )
 
     def _signatures_narrow(self, pages: DataFrame) -> DataFrame:
@@ -400,7 +398,6 @@ class DedupPipeline:
         c = self.config
         sig = self.signatures(pages)
         narrow = self._signatures_narrow(pages)
-        pages64 = self._pages64(pages)
         # per-source dedup is skipped (dedupe/count_shared False): the
         # union below ends in a groupBy on the pair key, which is the
         # ONE deduplicating exchange — each source's own distinct would
@@ -426,50 +423,30 @@ class DedupPipeline:
             n_salt=c.n_salt,
             dedupe=False,
         ).select("id_a", "id_b", F.lit(SRC_SIMHASH).alias("source"))
-        if "sub_grams" in sig.columns:
-            # fused sources: substring grams + text hash were computed
-            # inside the signature pass — no second text scan, no
-            # second Python stage, and a signatures-checkpoint resume
-            # regenerates candidates without touching the pages table
-            sub = substring_pairs_from_grams(
-                sig,
-                max_bucket_size=c.max_bucket_size,
-                salted_bucket_cap=c.salted_bucket_cap,
-                n_salt=c.n_salt,
-                count_shared=False,
-            ).select("id_a", "id_b", F.lit(SRC_SUBSTRING).alias("source"))
-            exact = (
-                exact_duplicates_from_hash(sig)
-                .where(F.col("id") != F.col("group_id"))
-                .select(
-                    F.col("group_id").alias("id_a"),
-                    F.col("id").alias("id_b"),
-                    F.lit(SRC_EXACT).alias("source"),
-                )
+        # fused sources: substring grams + text hash were computed inside
+        # the signature pass — no second text scan, no second Python
+        # stage, and a signatures-checkpoint resume regenerates
+        # candidates without touching the pages table
+        sub = substring_pairs_from_grams(
+            sig,
+            max_bucket_size=c.max_bucket_size,
+            salted_bucket_cap=c.salted_bucket_cap,
+            n_salt=c.n_salt,
+            count_shared=False,
+        ).select("id_a", "id_b", F.lit(SRC_SUBSTRING).alias("source"))
+        exact = (
+            exact_duplicates_from_hash(sig)
+            .where(F.col("id") != F.col("group_id"))
+            .select(
+                F.col("group_id").alias("id_a"),
+                F.col("id").alias("id_b"),
+                F.lit(SRC_EXACT).alias("source"),
             )
-        else:
-            sub = substring_fingerprint_pairs(
-                pages64,
-                id_col="id",
-                gram_len=c.substring_gram_len,
-                sample_mod=c.substring_sample_mod,
-                max_bucket_size=c.max_bucket_size,
-                salted_bucket_cap=c.salted_bucket_cap,
-                n_salt=c.n_salt,
-            ).select("id_a", "id_b", F.lit(SRC_SUBSTRING).alias("source"))
-            exact = (
-                exact_duplicates(pages64, id_col="id")
-                .where(F.col("id") != F.col("group_id"))
-                .select(
-                    F.col("group_id").alias("id_a"),
-                    F.col("id").alias("id_b"),
-                    F.lit(SRC_EXACT).alias("source"),
-                )
-            )
+        )
         pairs = lsh.unionByName(sim).unionByName(sub).unionByName(exact)
         if c.use_winnowing:
             win = winnowing_candidate_pairs(
-                pages64,
+                self._pages64(pages),
                 k=c.winnow_k,
                 window=c.winnow_window,
                 id_col="id",
@@ -509,12 +486,15 @@ class DedupPipeline:
         hashes_df = None
         if "shingle_hashes" not in sig.columns:
             # narrow checkpoint: re-derive the shingle sets in one
-            # tokenize+shingle Arrow pass; phase 2 joins them only for
-            # estimate-surviving pairs
-            from symspellpy_spark.operators.dedup import text_to_shingle_hashes
-
-            hashes_df = text_to_shingle_hashes(
-                self._pages64(pages), k=self.config.shingle_k
+            # tokenize+shingle Arrow pass (no MinHash/SimHash/band work);
+            # phase 2 joins them only for estimate-surviving pairs. Same
+            # kernel and token correction as the signature pass, so the
+            # shingles are hash-identical to the ones it dropped
+            hashes_df = text_to_signatures(
+                self._pages64(pages),
+                k=self.config.shingle_k,
+                shingles_only=True,
+                token_map=self._token_map(pages),
             )
         # two_phase: signatures are checkpointed here, so the extra
         # narrow-minhash join is a cheap re-scan and the fat shingle

@@ -5,6 +5,13 @@ resume, and the byte-identical-text invariant."""
 import pytest
 from pyspark.sql import functions as F
 
+from symspellpy_spark.operators.dedup import (
+    exact_duplicates,
+    lsh_candidate_pairs,
+    simhash_candidate_pairs,
+    substring_fingerprint_pairs,
+    token_correction_map,
+)
 from symspellpy_spark.operators.dictionary import SparkDictionary
 from symspellpy_spark.plans.pipeline import DedupConfig, DedupPipeline
 from symspellpy_spark.sources.pages import synthesize_pages, truth_pairs
@@ -15,6 +22,22 @@ from tests.test_dedup import brute_force_jaccard
 @pytest.fixture(scope="module")
 def pages(spark):
     return synthesize_pages(spark, n_docs=600, n_base=150, seed=42).cache()
+
+
+SIG_COLS = ("shingle_hashes", "minhash", "simhash", "bands")
+
+
+def _as_dict(token_map):
+    src, dst = token_map
+    return dict(zip(src.tolist(), dst.tolist()))
+
+
+def _metric(pipe, stage, name):
+    return next(
+        m["value"]
+        for m in pipe.metrics
+        if (m["stage"], m["metric"]) == (stage, name)
+    )
 
 
 def _same_cluster_pairs(clusters_rows):
@@ -121,12 +144,17 @@ def test_symspell_normalization_improves_matching(spark):
         [(w, 100) for w in texts[0].split()], "term string, count long"
     )
     d = SparkDictionary.from_words(spark, vocab)
-    cfg = DedupConfig(normalize_tokens=True, shingle_k=3)
-    pipe = DedupPipeline(spark, cfg, dictionary=d)
+    pipe = DedupPipeline(spark, DedupConfig(shingle_k=3), dictionary=d)
     # internal stage ids are xxhash64(url)
     ids = {r["url"]: r["id"] for r in pipe._id_map(pages).collect()}
-    toks = {r["id"]: list(r["tokens"]) for r in pipe.tokens(pages).collect()}
-    assert toks[ids["u0"]] == toks[ids["u1"]] == texts[0].split()
+    sigs = {r["id"]: r for r in pipe.signatures(pages).collect()}
+    # the correction map is exactly the two typo'd tokens
+    want = token_correction_map([("quik", "quick"), ("ovre", "over")])
+    assert _as_dict(pipe._token_map(pages)) == _as_dict(want)
+    assert _metric(pipe, "signatures", "corrected_tokens") == 2
+    u0, u1 = sigs[ids["u0"]], sigs[ids["u1"]]
+    for col in SIG_COLS:
+        assert u0[col] == u1[col], col
 
 
 def test_winnowing_sweep_catches_partial_overlap(spark):
@@ -270,25 +298,55 @@ def test_narrow_signature_checkpoint_bytes_and_equivalence(spark, pages, tmp_pat
 
 
 def test_fused_candidates_equal_legacy(spark, pages):
-    """fuse_candidates=True (default: substring grams + text hash come
-    out of the signature kernel) must produce identical edges and
-    clusters to the legacy per-source text scans — the shared
-    _ContentHasher guarantees identical gram hash values on ASCII
-    text."""
-    out_f = DedupPipeline(spark, DedupConfig()).run(pages)
-    out_l = DedupPipeline(spark, DedupConfig(fuse_candidates=False)).run(pages)
-    edges_f = {
+    """The fused substring + exact sources (grams and text hash come out
+    of the signature kernel) give the tagged candidate set that the
+    standalone per-source text scans give, together with the
+    pipeline's LSH and SimHash rows — the shared _ContentHasher
+    guarantees identical gram hash values on ASCII text."""
+    # plus an exact copy, so every source has pairs
+    url = pages.select(F.min("url")).first()[0]
+    pages = pages.unionByName(
+        pages.where(F.col("url") == url).withColumn("url", F.lit(url + "#copy"))
+    )
+    c = DedupConfig()
+    pipe = DedupPipeline(spark, c)
+    fused = {
         (r["id_a"], r["id_b"], tuple(sorted(r["sources"])))
-        for r in out_f["edges"].collect()
+        for r in pipe.candidate_pairs(pages).collect()
     }
-    edges_l = {
-        (r["id_a"], r["id_b"], tuple(sorted(r["sources"])))
-        for r in out_l["edges"].collect()
+    narrow = pipe._signatures_narrow(pages)
+    pages64 = pipe._pages64(pages)
+    caps = dict(
+        max_bucket_size=c.max_bucket_size,
+        salted_bucket_cap=c.salted_bucket_cap,
+        n_salt=c.n_salt,
+    )
+    by_source = {
+        "minhash_lsh": lsh_candidate_pairs(
+            narrow, bands=c.bands, num_perm=c.num_perm, bands_col="bands",
+            **caps,
+        ),
+        "simhash": simhash_candidate_pairs(
+            narrow, max_hamming=c.simhash_max_hamming, **caps
+        ),
+        "substring": substring_fingerprint_pairs(
+            pages64,
+            id_col="id",
+            gram_len=c.substring_gram_len,
+            sample_mod=c.substring_sample_mod,
+            **caps,
+        ),
+        "exact": exact_duplicates(pages64, id_col="id")
+        .where(F.col("id") != F.col("group_id"))
+        .select(F.col("group_id").alias("id_a"), F.col("id").alias("id_b")),
     }
-    assert edges_f == edges_l and len(edges_f) > 0
-    cl_f = {(r["url"], r["cluster_id"]) for r in out_f["clusters"].collect()}
-    cl_l = {(r["url"], r["cluster_id"]) for r in out_l["clusters"].collect()}
-    assert cl_f == cl_l
+    legacy = {}
+    for source, df in by_source.items():
+        for r in df.select("id_a", "id_b").collect():
+            legacy.setdefault((r["id_a"], r["id_b"]), set()).add(source)
+    legacy = {(a, b, tuple(sorted(s))) for (a, b), s in legacy.items()}
+    assert fused == legacy
+    assert {s for _, _, tags in fused for s in tags} == set(by_source)
 
 
 def test_fused_candidates_read_no_text(spark, pages):
