@@ -1365,7 +1365,13 @@ def q_compound_noisy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Input per doc: tokens 1-2 GLUED (a run-on the split branch must
     repair), token 3 broken after its 2nd char (a split error the merge
-    branch must repair), tokens 4-8 verbatim."""
+    branch must repair), tokens 4-8 verbatim.
+
+    The oracle computes each token's split scan as a column, not as a
+    correlated scalar subquery: under DuckDB 1.0.0 that subquery
+    returned the split results of other rows. A plain-Python replay of
+    the same fold pins the oracle's rows
+    (tests/test_entry_contract.py)."""
     docs = _read(spark, sf_dir, "documents")
     d = _dictionary(spark, sf_dir, DistanceAlgorithm.LEVENSHTEIN)
     ts = F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
@@ -3195,6 +3201,9 @@ def oracle_sql() -> dict[str, str]:
         # count replays the float chain N * prod(c/N) in part order.
         # LEVENSHTEIN dictionary => every distance is DuckDB
         # levenshtein() exactly (see q_compound_noisy docstring).
+        # The split scan's result (`fin`) is a plain column of `rowsj`,
+        # not a correlated scalar subquery: DuckDB 1.0.0 returned other
+        # rows' split results from that subquery.
         "compound_noisy": f"""
     WITH RECURSIVE tok AS (
         SELECT unnest(regexp_extract_all(lower(text), '{TOKEN_RE}')) AS term
@@ -3269,62 +3278,63 @@ def oracle_sql() -> dict[str, str]:
                                 cnt := ss.tmp_cnt) ORDER BY ss.j) AS cands
         FROM split_scored ss GROUP BY ss.term1
     ),
-    rowsx AS (
+    rowsj AS (
         SELECT t.doc_id, t.pos, t.term1,
                lc.s_term AS combi_term, lc.s_dist AS combi_dist,
                lc.s_count AS combi_count,
-               struct_pack(
-                   dist := COALESCE(ls.s_dist, 3),
-                   cnt := CASE WHEN ls.s_term IS NOT NULL
-                               THEN CAST(ls.s_count AS DOUBLE)
-                               WHEN length(t.term1) = 1 THEN 1.0
-                               ELSE 0.0 END
-               ) AS b2,
-               CASE
-                 WHEN ls.s_term IS NOT NULL
-                      AND (ls.s_dist = 0 OR length(t.term1) = 1)
-                 THEN struct_pack(term := ls.s_term,
-                                  dist := ls.s_dist,
-                                  cnt := CAST(ls.s_count AS DOUBLE))
-                 WHEN length(t.term1) > 1
-                 THEN (
-                     SELECT CASE WHEN fin.has
-                            THEN struct_pack(term := fin.term,
-                                             dist := fin.dist,
-                                             cnt := fin.cnt)
-                            ELSE struct_pack(term := t.term1,
-                                             dist := CAST(3 AS INTEGER),
-                                             cnt := 0.0) END
-                     FROM (
-                         SELECT list_reduce(
-                             list_prepend(
-                                 struct_pack(
-                                     has := ls.s_term IS NOT NULL,
-                                     term := COALESCE(ls.s_term, ''),
-                                     dist := COALESCE(ls.s_dist, CAST(999 AS INTEGER)),
-                                     cnt := CASE WHEN ls.s_term IS NOT NULL
-                                                 THEN CAST(ls.s_count AS DOUBLE)
-                                                 ELSE -1.0 END),
-                                 COALESCE(sr.cands,
-                                          CAST([] AS STRUCT(has BOOLEAN,
-                                               term VARCHAR, dist INTEGER,
-                                               cnt DOUBLE)[]))),
-                             (acc, c) -> CASE
-                                 WHEN acc.has AND c.dist > acc.dist THEN acc
-                                 WHEN (NOT acc.has) OR c.dist < acc.dist
-                                      OR c.cnt > acc.cnt
-                                 THEN struct_pack(has := true, term := c.term,
-                                                  dist := c.dist, cnt := c.cnt)
-                                 ELSE acc END) AS fin
-                     )
-                 )
-                 ELSE struct_pack(term := t.term1, dist := CAST(3 AS INTEGER),
-                                  cnt := 1.0)
-               END AS part_nm
+               ls.s_term, ls.s_dist, ls.s_count,
+               list_reduce(
+                   list_prepend(
+                       struct_pack(
+                           has := ls.s_term IS NOT NULL,
+                           term := COALESCE(ls.s_term, ''),
+                           dist := COALESCE(ls.s_dist, CAST(999 AS INTEGER)),
+                           cnt := CASE WHEN ls.s_term IS NOT NULL
+                                       THEN CAST(ls.s_count AS DOUBLE)
+                                       ELSE -1.0 END),
+                       COALESCE(sr.cands,
+                                CAST([] AS STRUCT(has BOOLEAN,
+                                     term VARCHAR, dist INTEGER,
+                                     cnt DOUBLE)[]))),
+                   (acc, c) -> CASE
+                       WHEN acc.has AND c.dist > acc.dist THEN acc
+                       WHEN (NOT acc.has) OR c.dist < acc.dist
+                            OR c.cnt > acc.cnt
+                       THEN struct_pack(has := true, term := c.term,
+                                        dist := c.dist, cnt := c.cnt)
+                       ELSE acc END) AS fin
         FROM toks t
         LEFT JOIN lut ls ON ls.query = t.term1
         LEFT JOIN lut lc ON lc.query = t.combo
         LEFT JOIN split_red sr ON sr.term1 = t.term1
+    ),
+    rowsx AS (
+        SELECT doc_id, pos, term1, combi_term, combi_dist, combi_count,
+               struct_pack(
+                   dist := COALESCE(s_dist, 3),
+                   cnt := CASE WHEN s_term IS NOT NULL
+                               THEN CAST(s_count AS DOUBLE)
+                               WHEN length(term1) = 1 THEN 1.0
+                               ELSE 0.0 END
+               ) AS b2,
+               CASE
+                 WHEN s_term IS NOT NULL
+                      AND (s_dist = 0 OR length(term1) = 1)
+                 THEN struct_pack(term := s_term,
+                                  dist := s_dist,
+                                  cnt := CAST(s_count AS DOUBLE))
+                 WHEN length(term1) > 1 AND fin.has
+                 THEN struct_pack(term := fin.term,
+                                  dist := fin.dist,
+                                  cnt := fin.cnt)
+                 WHEN length(term1) > 1
+                 THEN struct_pack(term := term1,
+                                  dist := CAST(3 AS INTEGER),
+                                  cnt := 0.0)
+                 ELSE struct_pack(term := term1, dist := CAST(3 AS INTEGER),
+                                  cnt := 1.0)
+               END AS part_nm
+        FROM rowsj
     ),
     fold AS (
         SELECT doc_id, -1 AS t,

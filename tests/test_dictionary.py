@@ -37,6 +37,8 @@ def test_delete_neighborhood_matches_reference_edits(spark, reference_symspell_m
 def test_en_dictionary_anchor_counts(spark):
     """82,834 words -> 676,094 delete keys at config (2,7,1)
     (reference tests/test_symspellpy.py:215-216)."""
+    if not os.path.exists(DICT_PATH):
+        pytest.skip(f"reference file absent: {DICT_PATH}")
     d = SparkDictionary.load_dictionary(spark, DICT_PATH).cache()
     assert d.word_count() == 82834
     assert d.entry_count() == 676094
@@ -46,6 +48,8 @@ def test_below_threshold_promotion(spark):
     """Terms below count_threshold stay out of words/deletes
     (reference symspellpy.py:221-231)."""
     path = os.path.join(FORTESTS, "below_threshold_dict.txt")
+    if not os.path.exists(path):
+        pytest.skip(f"reference file absent: {path}")
     cfg = EngineConfig(count_threshold=10)
     d = SparkDictionary.load_dictionary(spark, path, config=cfg)
     words = {r["term"]: r["count"] for r in d.words.collect()}
@@ -61,6 +65,8 @@ def test_separator_dictionary(spark):
     """Terms containing spaces load with '$' separator
     (reference tests/test_symspellpy.py:227-234)."""
     path = os.path.join(FORTESTS, "separator_dict.txt")
+    if not os.path.exists(path):
+        pytest.skip(f"reference file absent: {path}")
     d = SparkDictionary.load_dictionary(spark, path, separator="$")
     words = {r["term"]: r["count"] for r in d.words.collect()}
     assert any(" " in t for t in words)
@@ -68,6 +74,8 @@ def test_separator_dictionary(spark):
 
 def test_bad_dict_rows_skipped(spark):
     path = os.path.join(FORTESTS, "bad_dict.txt")
+    if not os.path.exists(path):
+        pytest.skip(f"reference file absent: {path}")
     d = SparkDictionary.load_dictionary(spark, path)
     rows = d.words.collect()
     assert all(r["count"] is not None for r in rows)
@@ -77,6 +85,8 @@ def test_non_en_dict(spark, reference_symspell_module):
     from symspellpy import SymSpell
 
     path = os.path.join(FORTESTS, "non_en_dict.txt")
+    if not os.path.exists(path):
+        pytest.skip(f"reference file absent: {path}")
     ref = SymSpell()
     ref.load_dictionary(path, 0, 1)
     d = SparkDictionary.load_dictionary(spark, path)

@@ -5,6 +5,7 @@ option quirks (ignore_pattern, include_unknown, transfer_casing) with a
 small dictionary, and against a brute-force Damerau-OSA scan of a
 seeded dictionary."""
 
+import os
 import random
 
 import pytest
@@ -24,6 +25,8 @@ NOISY_PATH = "/root/reference/tests/fortests/noisy_query_en_1000.txt"
 
 @pytest.fixture(scope="module")
 def en_dict(spark):
+    if not os.path.exists(DICT_PATH):
+        pytest.skip(f"reference file absent: {DICT_PATH}")
     return SparkDictionary.load_dictionary(spark, DICT_PATH).cache()
 
 
@@ -51,6 +54,8 @@ def _plan(df):
     "verb", [Verbosity.TOP, Verbosity.CLOSEST, Verbosity.ALL]
 )
 def test_equivalence_on_noisy_corpus(spark, en_dict, verb):
+    if not os.path.exists(NOISY_PATH):
+        pytest.skip(f"reference file absent: {NOISY_PATH}")
     with open(NOISY_PATH) as fh:
         noisy = [line.split()[0] for line in fh if line.strip()][::5]
     qdf = spark.createDataFrame([(w,) for w in noisy], "query string")
