@@ -23,6 +23,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
@@ -47,6 +49,7 @@ __all__ = [
     "simhash_candidate_pairs",
     "substring_fingerprint_pairs",
     "substring_pairs_from_grams",
+    "signature_candidate_pairs",
     "exact_duplicates",
     "exact_duplicates_from_hash",
     "boilerplate_segments",
@@ -346,6 +349,19 @@ class _PolyPrefix:
         return (T[e] - T[s]) * self.pow_at(s)
 
 
+@functools.cache
+def _poly(base: int) -> _PolyPrefix:
+    """The :class:`_PolyPrefix` of ``base``, built once per process.
+
+    Its tables (16 MiB of random-looking uint64s, a pure function of
+    ``base``) are what make the kernels heavy. Kernels therefore capture
+    only their constructor arguments and reach the tables through this
+    cache, so Spark's pickled command stays a few KB instead of shipping
+    (and broadcasting) the tables on every call: each Python worker
+    builds them on first use and reuses them across tasks and calls."""
+    return _PolyPrefix(base)
+
+
 def _sig_schema(
     df: DataFrame,
     id_col: str,
@@ -398,8 +414,8 @@ class _SignatureGen:
         self.pack_minhash = pack_minhash
         if not shingles_only:
             self.a, self.b = _minhash_params(num_perm, seed)
-        self.tok_poly = _PolyPrefix(_TOK_BASE)
-        self.shg_poly = _PolyPrefix(_SHG_BASE)
+        self.tok_poly = _poly(_TOK_BASE)
+        self.shg_poly = _poly(_SHG_BASE)
         if n_bands:
             self.rows_per_band = num_perm // n_bands
             self.band_w = (
@@ -653,7 +669,7 @@ def token_correction_map(
     """``(token, corrected)`` pairs -> the ``token_map`` of
     :func:`text_to_signatures`: the kernel hashes of the tokens, sorted,
     and aligned with them the kernel hashes of their corrections."""
-    poly = _PolyPrefix(_TOK_BASE)
+    poly = _poly(_TOK_BASE)
 
     def hashes(words: list[str]) -> np.ndarray:
         raw = [w.encode() for w in words]
@@ -709,9 +725,15 @@ def text_to_signatures(
     ``token_map``: ``(src, dst)`` uint64 arrays from
     :func:`token_correction_map`, ``src`` sorted. Every token whose hash
     is in ``src`` is hashed as its correction instead, before shingling
-    (the pipeline's SymSpell token correction). The arrays travel in
-    the kernel's pickled command, which Spark ships as a broadcast once
-    it exceeds ``spark.broadcast.UDFCompressionThreshold`` (1 MB).
+    (the pipeline's SymSpell token correction).
+
+    The kernel's pickled command carries only these arguments and
+    ``token_map``: the polynomial hash tables are built on each Python
+    worker, once per process (see :func:`_poly`), and hash bit-identically
+    to driver-built ones. A command over
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MB) would be pickled
+    and broadcast on every call; ``token_map`` alone reaches that only
+    past ~60k corrected tokens.
 
     Fused candidate-source columns (so the pipeline's candidate
     generation never re-scans text):
@@ -728,18 +750,20 @@ def text_to_signatures(
       polynomial content hash for exact-duplicate grouping
       (:func:`exact_duplicates_from_hash`).
     """
-    siggen = _SignatureGen(
+    sig_args = (
         k, num_perm, seed, n_bands, shingles_only, emit_shingles, pack_minhash
     )
     want_extras = (substring_gram_len or emit_text_hash) and not shingles_only
-    hasher = (
-        _ContentHasher(substring_gram_len or 40, substring_sample_mod)
-        if want_extras
-        else None
-    )
 
     def _batches(it):
         import pyarrow as pa
+
+        siggen = _SignatureGen(*sig_args)
+        hasher = (
+            _ContentHasher(substring_gram_len or 40, substring_sample_mod)
+            if want_extras
+            else None
+        )
 
         def extras_of(raw: np.ndarray, bounds: np.ndarray):
             # bounds: int64 (n+1) per-doc byte offsets into raw
@@ -871,6 +895,11 @@ def _bucket_pairs(
 
     ``member_col`` may be a string column name or a struct Column; pairs
     are ordered by the struct's first field.
+
+    ``bucket_cols`` may lead with a source tag, so that several candidate
+    sources share the one shuffle, checkpoint and join: each bucket, its
+    size and its cap then stay within one source (see
+    :func:`signature_candidate_pairs`).
     """
     member = F.col(member_col) if isinstance(member_col, str) else member_col
     if salted_cap is not None and salted_cap > max_bucket_size and n_salt < 1:
@@ -992,7 +1021,6 @@ def lsh_candidate_pairs(
     bands_col: str | None = None,
     salted_bucket_cap: int | None = None,
     n_salt: int = 8,
-    dedupe: bool = True,
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs from MinHash LSH banding.
 
@@ -1004,12 +1032,6 @@ def lsh_candidate_pairs(
     carries precomputed band hashes (see :func:`text_to_signatures`)
     — candidate generation then never touches the num_perm-wide
     minhash column.
-
-    ``dedupe=False`` skips the final distinct (its exchange + hash
-    aggregation) and may emit one row per shared band: for a consumer
-    that deduplicates pairs itself anyway (the pipeline's multi-source
-    candidate union ends in a groupBy on the pair key), the per-source
-    distinct is a redundant extra shuffle of the pair relation.
     """
     banded = _banded(signatures, bands, num_perm, bands_col=bands_col)
     pairs = _bucket_pairs(
@@ -1019,8 +1041,8 @@ def lsh_candidate_pairs(
         max_bucket_size,
         salted_cap=salted_bucket_cap,
         n_salt=n_salt,
-    ).select("id_a", "id_b")
-    return pairs.distinct() if dedupe else pairs
+    )
+    return pairs.distinct()
 
 
 def simhash_signatures(
@@ -1056,6 +1078,24 @@ def simhash_signatures(
     )
 
 
+def _simhash_blocks(n_blocks: int) -> "F.Column":
+    """``array<struct<block_id, block_value>>``: the ``simhash`` column
+    cut into ``n_blocks`` bit blocks. Pigeonhole: two simhashes within
+    Hamming distance ``n_blocks - 1`` agree on at least one block."""
+    width = 64 // n_blocks
+    return F.array(
+        *(
+            F.struct(
+                F.lit(i).alias("block_id"),
+                F.shiftrightunsigned(F.col("simhash"), i * width)
+                .bitwiseAND(F.lit((1 << width) - 1) if width < 64 else F.lit(-1))
+                .alias("block_value"),
+            )
+            for i in range(n_blocks)
+        )
+    )
+
+
 def simhash_candidate_pairs(
     signatures: DataFrame,
     max_hamming: int = 3,
@@ -1063,7 +1103,6 @@ def simhash_candidate_pairs(
     max_bucket_size: int = 1000,
     salted_bucket_cap: int | None = None,
     n_salt: int = 8,
-    dedupe: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, hamming) pairs with Hamming(simhash) <= max_hamming.
 
@@ -1071,28 +1110,11 @@ def simhash_candidate_pairs(
     blocks; any pair within the Hamming ball shares at least one intact
     block -> equi-join on (block_id, block_value), verify with
     bit_count(xor) — all whole-stage codegen.
-
-    ``dedupe=False`` skips the final distinct (pairs sharing several
-    intact blocks then appear once per such block) — for consumers that
-    deduplicate pairs downstream anyway (see
-    :func:`lsh_candidate_pairs`).
     """
-    if n_blocks is None:
-        n_blocks = max_hamming + 1
-    width = 64 // n_blocks
-    blocks = [
-        F.struct(
-            F.lit(i).alias("block_id"),
-            F.shiftrightunsigned(F.col("simhash"), i * width)
-            .bitwiseAND(F.lit((1 << width) - 1) if width < 64 else F.lit(-1))
-            .alias("block_value"),
-        )
-        for i in range(n_blocks)
-    ]
     exploded = signatures.select(
-        "id", F.col("simhash"), F.explode(F.array(*blocks)).alias("b")
-    ).select(
-        "id", "simhash", F.col("b.block_id").alias("block_id"), F.col("b.block_value").alias("block_value")
+        "id",
+        "simhash",
+        F.inline(_simhash_blocks(max_hamming + 1 if n_blocks is None else n_blocks)),
     )
     pairs = _bucket_pairs(
         exploded,
@@ -1109,22 +1131,7 @@ def simhash_candidate_pairs(
             F.col("id_a.simhash").bitwiseXOR(F.col("id_b.simhash"))
         ).alias("hamming"),
     ).where(F.col("hamming") <= max_hamming)
-    return verified.distinct() if dedupe else verified
-
-
-def _pow_u64(base: int, exp: np.ndarray) -> np.ndarray:
-    """base**exp mod 2^64, vectorized square-and-multiply over int64/uint64
-    exponents (array multiplies wrap silently; the running square is kept
-    as a Python int to avoid numpy's scalar-overflow warning)."""
-    out = np.ones(exp.size, dtype=np.uint64)
-    e = exp.astype(np.uint64)
-    b = base & 0xFFFFFFFFFFFFFFFF
-    mx = int(e.max()) if e.size else 0
-    for bit in range(mx.bit_length()):
-        sel = ((e >> np.uint64(bit)) & np.uint64(1)).astype(bool)
-        out[sel] *= np.uint64(b)
-        b = (b * b) & 0xFFFFFFFFFFFFFFFF
-    return out
+    return verified.distinct()
 
 
 class _ContentHasher:
@@ -1137,16 +1144,14 @@ class _ContentHasher:
     prefix-product machinery: h_p = sum_j c[p+j]*base^(L-1-j)  (mod 2^64)
                                   = base^(L-1+p) * (T[p+L] - T[p])
     with T[k] = sum_{i<k} c[i]*inv^i and inv = base^-1 mod 2^64 (base is
-    odd, so invertible). One cumsum + O(1) work per window replaces the
-    L strided multiply-add passes of the naive kernel — ~30x less
-    memory traffic, which is what decides multi-core scaling here.
+    odd, so invertible) — :meth:`_PolyPrefix.prefix`, over the
+    per-process tables of :func:`_poly`, so constructing a hasher is
+    cheap. One cumsum + O(1) work per window replaces the L strided
+    multiply-add passes of the naive kernel — ~30x less memory traffic,
+    which is what decides multi-core scaling here.
     """
 
-    PBLK = 1 << 20
-    # FNV-prime multiplier (odd -> good mixing mod 2^64)
-    BASE = 1099511628211
-
-    def __init__(self, gram_len: int, sample_mod: int, base: int = BASE):
+    def __init__(self, gram_len: int, sample_mod: int):
         self.gram_len = gram_len
         self.mod = np.uint64(sample_mod)
         # power-of-two sampling rates (the shipped configs) test the low
@@ -1158,42 +1163,10 @@ class _ContentHasher:
             if sample_mod > 0 and (sample_mod & (sample_mod - 1)) == 0
             else None
         )
-        self.base = base
-        PBLK = self.PBLK
-        inv = pow(base, -1, 1 << 64)
-        self._pow_tab = np.empty(PBLK, dtype=np.uint64)
-        self._inv_tab = np.empty(PBLK, dtype=np.uint64)
-        self._pow_tab[0] = 1
-        self._inv_tab[0] = 1
-        np.multiply.accumulate(
-            np.full(PBLK - 1, base, dtype=np.uint64), out=self._pow_tab[1:]
-        )
-        np.multiply.accumulate(
-            np.full(PBLK - 1, np.uint64(inv), dtype=np.uint64),
-            out=self._inv_tab[1:],
-        )
-        self.pow_blk = np.uint64(pow(base, PBLK, 1 << 64))
-        self.inv_blk = np.uint64(pow(inv, PBLK, 1 << 64))
-        self.base_lm1 = np.uint64(pow(base, gram_len - 1, 1 << 64))
-
-    def prefix(self, flat: np.ndarray) -> np.ndarray:
-        """T[k] = sum_{i<k} c[i]*inv^i (mod 2^64), built blockwise so the
-        inv^i table stays cache-resident."""
-        total = flat.size
-        T = np.empty(total + 1, dtype=np.uint64)
-        T[0] = 0
-        scale = np.uint64(1)
-        for w0 in range(0, total, self.PBLK):
-            w1 = min(w0 + self.PBLK, total)
-            T[w0 + 1 : w1 + 1] = flat[w0:w1].astype(np.uint64) * (
-                self._inv_tab[: w1 - w0] * scale
-            )
-            # scalar uint64 overflow warns in numpy; wrap via Python ints
-            scale = np.uint64(
-                (int(scale) * int(self.inv_blk)) & 0xFFFFFFFFFFFFFFFF
-            )
-        np.cumsum(T, out=T)
-        return T
+        # the FNV-prime base the token hashes use: one shared table set
+        self.poly = _poly(_TOK_BASE)
+        self.prefix = self.poly.prefix
+        self.base_lm1 = pow(_TOK_BASE, gram_len - 1, 1 << 64)
 
     def sampled_per_doc(
         self, T: np.ndarray, starts: np.ndarray, lens: np.ndarray
@@ -1209,15 +1182,14 @@ class _ContentHasher:
         if n_win <= 0:
             return offs, np.empty(0, dtype=np.int64)
         pos_parts, val_parts = [], []
+        poly = self.poly
         scale = self.base_lm1
-        for w0 in range(0, n_win, self.PBLK):
-            w1 = min(w0 + self.PBLK, n_win)
-            hb = (self._pow_tab[: w1 - w0] * scale) * (
+        for w0 in range(0, n_win, poly.PBLK):
+            w1 = min(w0 + poly.PBLK, n_win)
+            hb = (poly.pow_tab[: w1 - w0] * np.uint64(scale)) * (
                 T[w0 + L : w1 + L] - T[w0:w1]
             )
-            scale = np.uint64(
-                (int(scale) * int(self.pow_blk)) & 0xFFFFFFFFFFFFFFFF
-            )
+            scale = (scale * poly.pow_blk) & 0xFFFFFFFFFFFFFFFF
             sel = np.flatnonzero(
                 (hb & self._mod_mask) == 0
                 if self._mod_mask is not None
@@ -1258,7 +1230,7 @@ class _ContentHasher:
         (equal content hashes equal regardless of batch offset);
         zero-length docs hash to fmix64(0)."""
         e = starts + lens
-        raw = _pow_u64(self.base, np.maximum(e - 1, 0)) * (T[e] - T[starts])
+        raw = self.poly.pow_at(np.maximum(e - 1, 0)) * (T[e] - T[starts])
         raw[lens == 0] = 0
         return _fmix64(raw ^ (lens.astype(np.uint64) << np.uint64(1)))
 
@@ -1290,16 +1262,18 @@ def substring_fingerprint_pairs(
     sampling runs fused into the signature kernel
     (``text_to_signatures(substring_gram_len=...)``) so candidate
     generation needs no second text scan — see
-    :func:`substring_pairs_from_grams`.
+    :func:`substring_pairs_from_grams` and
+    :func:`signature_candidate_pairs`.
     """
-    hasher = _ContentHasher(gram_len, sample_mod)
 
     @F.pandas_udf(ArrayType(LongType()))
     def sampled_grams(texts: pd.Series) -> pd.Series:
         # whole-batch: concatenate all docs' char codes, compute every
         # window hash via the prefix-sum identity, mask out windows that
         # cross document boundaries, then scatter sampled hashes back to
-        # their documents via searchsorted.
+        # their documents via searchsorted. The hasher is built here, on
+        # the worker, so the UDF captures only its two arguments.
+        hasher = _ContentHasher(gram_len, sample_mod)
         n_docs = len(texts)
         codes_list = []
         lens = np.zeros(n_docs, dtype=np.int64)
@@ -1347,7 +1321,6 @@ def substring_pairs_from_grams(
     max_bucket_size: int = 1000,
     salted_bucket_cap: int | None = None,
     n_salt: int = 8,
-    count_shared: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, shared_grams) from precomputed sampled gram hashes
     (``text_to_signatures(substring_gram_len=...)``): the substring
@@ -1355,11 +1328,6 @@ def substring_pairs_from_grams(
     second text scan or Python stage — explode + capped bucket join
     only. Docs shorter than gram_len carry an empty list and drop out
     at the explode, mirroring the standalone operator's length filter.
-
-    ``count_shared=False`` skips the pair aggregation (one exchange +
-    hash agg) and emits (id_a, id_b) once per shared gram — for
-    consumers that discard ``shared_grams`` and deduplicate pairs
-    downstream anyway (see :func:`lsh_candidate_pairs`).
     """
     grams = sig.select(
         F.col(id_col).alias("id"), F.explode(F.col(grams_col)).alias("g")
@@ -1372,10 +1340,60 @@ def substring_pairs_from_grams(
         salted_cap=salted_bucket_cap,
         n_salt=n_salt,
     )
-    if not count_shared:
-        return pairs
     return pairs.groupBy("id_a", "id_b").agg(
         F.count("*").alias("shared_grams")
+    )
+
+
+def signature_candidate_pairs(
+    sig: DataFrame,
+    max_hamming: int = 3,
+    max_bucket_size: int = 1000,
+    salted_bucket_cap: int | None = None,
+    n_salt: int = 8,
+) -> DataFrame:
+    """(id_a, id_b, source) from three candidate sources of the signature
+    relation ``(id, bands, simhash, sub_grams)`` in ONE capped bucket join.
+    ``source`` is 0 for an LSH band, 1 for a SimHash block, 2 for a
+    substring gram.
+
+    Every source is a key -> id bucket, so one tagged relation
+    ``(s, k1, k2, id, simhash)`` carries all three: ``(0, band index,
+    band hash)``, ``(1, block id, block value)`` for the
+    ``max_hamming + 1`` blocks, and ``(2, 0, gram)``, built in one scan
+    (each row's tagged keys concatenated and inlined). The tag keeps each
+    source's buckets, and so their caps, apart: the pairs are those of
+    :func:`lsh_candidate_pairs`, :func:`simhash_candidate_pairs` and
+    :func:`substring_pairs_from_grams` at the same caps, with one window
+    shuffle, one checkpoint and one self-join instead of three. SimHash
+    pairs keep the Hamming filter. A pair appears once per shared bucket;
+    the caller deduplicates.
+    """
+    def key(s, k1, k2):
+        return F.struct(F.lit(s).alias("s"), k1.alias("k1"), k2.alias("k2"))
+
+    keys = F.concat(
+        F.transform("bands", lambda h, i: key(0, i, h)),
+        F.transform(
+            _simhash_blocks(max_hamming + 1),
+            lambda b: key(1, b["block_id"], b["block_value"]),
+        ),
+        F.transform("sub_grams", lambda g: key(2, F.lit(0), g)),
+    )
+    tagged = sig.select("id", "simhash", F.inline(keys))
+    pairs = _bucket_pairs(
+        tagged,
+        ["s", "k1", "k2"],
+        F.struct("id", "s", "simhash"),
+        max_bucket_size,
+        salted_cap=salted_bucket_cap,
+        n_salt=n_salt,
+    )
+    hamming = F.bit_count(F.col("id_a.simhash").bitwiseXOR(F.col("id_b.simhash")))
+    return pairs.where((F.col("id_a.s") != 1) | (hamming <= max_hamming)).select(
+        F.col("id_a.id").alias("id_a"),
+        F.col("id_b.id").alias("id_b"),
+        F.col("id_a.s").alias("source"),
     )
 
 
@@ -1709,8 +1727,8 @@ def winnowing_candidate_pairs(
 
     ``count_shared=False`` skips the pair aggregation and emits
     (id_a, id_b) once per shared fingerprint — for consumers that
-    discard the count and deduplicate pairs downstream anyway (see
-    :func:`lsh_candidate_pairs`)."""
+    discard the count and deduplicate pairs downstream anyway (the
+    pipeline's candidate groupBy)."""
     # positions=False: the kernel dedups fingerprints per doc, so the
     # (id, fingerprint) relation is distinct by construction and the
     # distinct exchange this select used to need disappears

@@ -2,9 +2,16 @@
 
 The north-star job (BASELINE.json): pages -> one fused Arrow kernel
 (``text_to_signatures``: tokens, shingles, MinHash, SimHash, LSH bands,
-substring grams, text hash) -> candidate pairs (LSH bands ∪ SimHash
-Hamming ∪ substring fingerprints ∪ exact-hash) -> exact-Jaccard verify
+substring grams, text hash) -> candidate pairs -> exact-Jaccard verify
 -> connected components -> clusters.
+
+Candidate generation reads the signatures relation, not the text
+(only the optional winnowing sweep has its own text pass). LSH bands,
+SimHash blocks and substring grams are all key -> id buckets, the shape
+of SymSpell's delete index, so one tagged relation carries the three and
+ONE capped bucket join pairs them (``signature_candidate_pairs``);
+exact-hash groups add star edges to the group minimum, never capped.
+A final groupBy folds each pair's sources into one row.
 
 Passing a ``dictionary`` turns on SymSpell token correction: the
 kernel's distinct tokens are resolved once with ``lookup_batch`` TOP
@@ -28,19 +35,17 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from symspellpy_spark.config import DistanceAlgorithm, EngineConfig, Verbosity
+from symspellpy_spark.config import DistanceAlgorithm, Verbosity
 from symspellpy_spark.operators.cluster import connected_components
 from symspellpy_spark.operators.dedup import (
     exact_duplicates_from_hash,
     jaccard_verify,
     kernel_tokens,
-    lsh_candidate_pairs,
-    simhash_candidate_pairs,
-    substring_pairs_from_grams,
+    signature_candidate_pairs,
     text_to_signatures,
     token_correction_map,
     unpack_hashes,
@@ -58,16 +63,18 @@ __all__ = ["DedupConfig", "DedupPipeline"]
 # config+version, which would otherwise accept them).
 PIPELINE_VERSION = 2
 
-# Candidate-source tags, defined ONCE: candidate_pairs() stamps each
-# union branch with these literals, and the per-source metrics tally in
+# Candidate-source tags, defined ONCE: candidate_pairs() names each pair's
+# sources with these literals, and the per-source metrics tally in
 # edges() iterates the same constants — so adding or renaming a source
-# cannot silently drop it from metrics (round-4 advice).
+# cannot silently drop it from metrics.
 SRC_LSH = "minhash_lsh"
 SRC_SIMHASH = "simhash"
 SRC_SUBSTRING = "substring"
 SRC_EXACT = "exact"
 SRC_WINNOW = "winnowing"
-CANDIDATE_SOURCES = (SRC_LSH, SRC_SIMHASH, SRC_SUBSTRING, SRC_EXACT)
+# the sources of signature_candidate_pairs, indexed by its tags 0, 1, 2
+BUCKET_SOURCES = (SRC_LSH, SRC_SIMHASH, SRC_SUBSTRING)
+CANDIDATE_SOURCES = (*BUCKET_SOURCES, SRC_EXACT)
 
 
 @dataclass
@@ -115,14 +122,9 @@ class DedupConfig:
     # re-reads are nearly free, so re-deriving would only cost.
     checkpoint_shingles: bool = False
     checkpoint_codec: str = "zstd"
-    engine: EngineConfig = field(default_factory=EngineConfig)
 
     def to_json(self) -> str:
-        d = {k: v for k, v in self.__dict__.items() if k != "engine"}
-        d["engine"] = {
-            "max_dictionary_edit_distance": self.engine.max_dictionary_edit_distance,
-            "prefix_length": self.engine.prefix_length,
-        }
+        d = dict(self.__dict__)
         d["pipeline_version"] = PIPELINE_VERSION
         return json.dumps(d, sort_keys=True)
 
@@ -380,60 +382,29 @@ class DedupPipeline:
             "text_hash",
         )
 
-    def _signatures_narrow(self, pages: DataFrame) -> DataFrame:
-        """(id, bands, simhash) — candidate generation reads THIS.
-
-        RDD checkpoints (and wide shuffle rows) do not column-prune, so
-        the band/block probing stages would otherwise deserialize the
-        full shingle+minhash payload (~2-3KB/doc) once per consumer;
-        the narrow relation is ~50B/doc."""
-        if "sig_narrow" not in self._memo:
-            narrow = self.signatures(pages).select("id", "bands", "simhash")
-            if self.checkpoint_dir is None:
-                narrow = narrow.localCheckpoint(eager=False)
-            self._memo["sig_narrow"] = narrow
-        return self._memo["sig_narrow"]
-
     def candidate_pairs(self, pages: DataFrame) -> DataFrame:
+        """(id_a, id_b, sources): every candidate pair once, with the
+        names of the sources that found it.
+
+        All sources read the signatures relation, never the text (a
+        signatures-checkpoint resume regenerates candidates without
+        touching the pages table), except winnowing, which has its own
+        kernel pass. LSH bands, SimHash blocks and substring grams share
+        ONE tagged, capped bucket join (``signature_candidate_pairs``).
+        Exact-hash groups are star edges to the group minimum, outside
+        the bucket cap: an exact-duplicate group is never dropped."""
         c = self.config
         sig = self.signatures(pages)
-        narrow = self._signatures_narrow(pages)
-        # per-source dedup is skipped (dedupe/count_shared False): the
-        # union below ends in a groupBy on the pair key, which is the
-        # ONE deduplicating exchange — each source's own distinct would
-        # re-shuffle its pair relation just to collapse rows the final
-        # aggregation collapses anyway (guide §2.4: remove shuffles
-        # outright; the map-side partial collect_set bounds what the
-        # extra duplicate rows add to the surviving exchange)
-        lsh = lsh_candidate_pairs(
-            narrow,
-            bands=c.bands,
-            num_perm=c.num_perm,
-            max_bucket_size=c.max_bucket_size,
-            bands_col="bands",
-            salted_bucket_cap=c.salted_bucket_cap,
-            n_salt=c.n_salt,
-            dedupe=False,
-        ).select("id_a", "id_b", F.lit(SRC_LSH).alias("source"))
-        sim = simhash_candidate_pairs(
-            narrow,
+        tag_names = F.array(*(F.lit(s) for s in BUCKET_SOURCES))
+        bucketed = signature_candidate_pairs(
+            sig,
             max_hamming=c.simhash_max_hamming,
             max_bucket_size=c.max_bucket_size,
             salted_bucket_cap=c.salted_bucket_cap,
             n_salt=c.n_salt,
-            dedupe=False,
-        ).select("id_a", "id_b", F.lit(SRC_SIMHASH).alias("source"))
-        # fused sources: substring grams + text hash were computed inside
-        # the signature pass — no second text scan, no second Python
-        # stage, and a signatures-checkpoint resume regenerates
-        # candidates without touching the pages table
-        sub = substring_pairs_from_grams(
-            sig,
-            max_bucket_size=c.max_bucket_size,
-            salted_bucket_cap=c.salted_bucket_cap,
-            n_salt=c.n_salt,
-            count_shared=False,
-        ).select("id_a", "id_b", F.lit(SRC_SUBSTRING).alias("source"))
+        ).select(
+            "id_a", "id_b", F.element_at(tag_names, F.col("source") + 1).alias("source")
+        )
         exact = (
             exact_duplicates_from_hash(sig)
             .where(F.col("id") != F.col("group_id"))
@@ -443,7 +414,7 @@ class DedupPipeline:
                 F.lit(SRC_EXACT).alias("source"),
             )
         )
-        pairs = lsh.unionByName(sim).unionByName(sub).unionByName(exact)
+        pairs = bucketed.unionByName(exact)
         if c.use_winnowing:
             win = winnowing_candidate_pairs(
                 self._pages64(pages),
@@ -456,9 +427,11 @@ class DedupPipeline:
                 count_shared=False,
             ).select("id_a", "id_b", F.lit(SRC_WINNOW).alias("source"))
             pairs = pairs.unionByName(win)
-        # candidate rows are narrow; AQE would coalesce this exchange to
-        # ~1 partition and serialize the dedup — pin a row-balanced
-        # partitioning on the group keys (reused by the groupBy)
+        # a pair shared by several buckets or sources arrives once per
+        # bucket; this groupBy is the one deduplicating exchange. Candidate
+        # rows are narrow, and AQE would coalesce it to ~1 partition and
+        # serialize the dedup — pin a row-balanced partitioning on the
+        # group keys (reused by the groupBy)
         pairs = pairs.repartition(
             self.spark.sparkContext.defaultParallelism * 2, "id_a", "id_b"
         )

@@ -17,6 +17,7 @@ from symspellpy_spark.operators.dedup import (
     simhash_candidate_pairs,
     simhash_signatures,
     substring_fingerprint_pairs,
+    text_to_signatures,
 )
 from symspellpy_spark.sources.pages import synthesize_pages, truth_pairs
 
@@ -660,3 +661,55 @@ def test_fused_extras_non_ascii_and_empty(spark):
     assert rows[4]["sub_grams"] == [] and rows[5]["sub_grams"] == []
     exact = {tuple(r) for r in exact_duplicates_from_hash(sig).collect()}
     assert exact == {(4, 4, 2), (5, 4, 2)}
+
+
+def _shipped_kernels(spark, monkeypatch, build):
+    """The Python functions ``build()`` hands to ``mapInArrow`` or
+    ``pandas_udf``: Spark pickles each into the command of every task."""
+    df_cls = type(spark.range(1))
+    map_in_arrow, pandas_udf = df_cls.mapInArrow, F.pandas_udf
+    shipped = []
+
+    def record_map(self, func, *args, **kwargs):
+        shipped.append(func)
+        return map_in_arrow(self, func, *args, **kwargs)
+
+    def record_udf(*args, **kwargs):
+        decorate = pandas_udf(*args, **kwargs)
+
+        def wrap(func):
+            shipped.append(func)
+            return decorate(func)
+
+        return wrap
+
+    monkeypatch.setattr(df_cls, "mapInArrow", record_map)
+    monkeypatch.setattr(F, "pandas_udf", record_udf)
+    build()
+    return shipped
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda docs: text_to_signatures(docs, n_bands=32),
+        lambda docs: text_to_signatures(
+            docs, n_bands=32, substring_gram_len=40, emit_text_hash=True
+        ),
+        lambda docs: text_to_signatures(docs, shingles_only=True),
+        lambda docs: substring_fingerprint_pairs(docs, id_col="id"),
+    ],
+    ids=["signatures", "signatures_extras", "shingles_only", "substring"],
+)
+def test_pickled_kernel_under_1mb(spark, monkeypatch, build):
+    """A kernel captures its arguments, not its hash tables (built per
+    worker): a pickled command over
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MB) is broadcast
+    again on every call. The test builds plans only; no job runs."""
+    from pyspark import cloudpickle
+
+    docs = spark.createDataFrame([(1, "a b c")], "id long, text string")
+    shipped = _shipped_kernels(spark, monkeypatch, lambda: build(docs))
+    assert shipped
+    for func in shipped:
+        assert len(cloudpickle.dumps(func)) < 1 << 20

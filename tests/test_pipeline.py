@@ -297,24 +297,35 @@ def test_narrow_signature_checkpoint_bytes_and_equivalence(spark, pages, tmp_pat
     assert b_narrow < 0.55 * b_full, (b_narrow, b_full)
 
 
-def test_fused_candidates_equal_legacy(spark, pages):
-    """The fused substring + exact sources (grams and text hash come out
-    of the signature kernel) give the tagged candidate set that the
-    standalone per-source text scans give, together with the
-    pipeline's LSH and SimHash rows — the shared _ContentHasher
-    guarantees identical gram hash values on ASCII text."""
+@pytest.mark.parametrize(
+    "caps",
+    [
+        {},
+        {"max_bucket_size": 3},
+        {"max_bucket_size": 3, "salted_bucket_cap": 10**6, "n_salt": 4},
+    ],
+    ids=["default", "capped", "salted"],
+)
+def test_fused_candidates_equal_legacy(spark, pages, caps):
+    """The one tagged bucket join over the signatures (LSH bands,
+    SimHash blocks, substring grams) plus the exact-hash star edges give
+    the tagged candidate set of the per-source operators: LSH and
+    SimHash over the signatures, and the standalone substring and exact
+    text scans — the shared _ContentHasher guarantees identical gram
+    hash values on ASCII text. Under a small cap, with or without the
+    salted tier, the tag keeps each source's buckets and caps apart."""
     # plus an exact copy, so every source has pairs
     url = pages.select(F.min("url")).first()[0]
     pages = pages.unionByName(
         pages.where(F.col("url") == url).withColumn("url", F.lit(url + "#copy"))
     )
-    c = DedupConfig()
+    c = DedupConfig(**caps)
     pipe = DedupPipeline(spark, c)
     fused = {
         (r["id_a"], r["id_b"], tuple(sorted(r["sources"])))
         for r in pipe.candidate_pairs(pages).collect()
     }
-    narrow = pipe._signatures_narrow(pages)
+    narrow = pipe.signatures(pages).select("id", "bands", "simhash")
     pages64 = pipe._pages64(pages)
     caps = dict(
         max_bucket_size=c.max_bucket_size,

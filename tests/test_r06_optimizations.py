@@ -4,8 +4,8 @@ an optimization that changes an operator's internals gets a test).
 Each test pins the NEW fast path against the result-equivalent old
 formulation on the same inputs:
 
-- candidate-source dedupe/count_shared flags: skipping the per-source
-  dedup exchange must change multiplicity only, never the pair set;
+- winnowing's count_shared flag: skipping the pair aggregation must
+  change multiplicity only, never the pair set;
 - jaccard_verify's |A|+|B|-|A∩B| union size: bit-identical jaccard
   values vs the array_union formulation on distinct arrays;
 - winnowing positions=False: the kernel-deduped (id, fingerprint)
@@ -16,10 +16,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from symspellpy_spark.operators.dedup import (
-    lsh_candidate_pairs,
-    simhash_candidate_pairs,
-    substring_pairs_from_grams,
-    text_to_signatures,
     winnowing_candidate_pairs,
     winnowing_fingerprints,
 )
@@ -36,40 +32,10 @@ def corpus(spark):
     )
 
 
-@pytest.fixture(scope="module")
-def sig(corpus):
-    return text_to_signatures(
-        corpus, k=5, num_perm=128, seed=1337, n_bands=32,
-        substring_gram_len=40, substring_sample_mod=16, emit_text_hash=True,
-    ).localCheckpoint(eager=True)
-
-
 def _pairs(df):
     return sorted(
         (r["id_a"], r["id_b"]) for r in df.select("id_a", "id_b").collect()
     )
-
-
-def test_lsh_dedupe_flag_same_pair_set(sig):
-    deduped = _pairs(lsh_candidate_pairs(sig, bands=32, num_perm=128,
-                                         bands_col="bands"))
-    raw = lsh_candidate_pairs(sig, bands=32, num_perm=128,
-                              bands_col="bands", dedupe=False)
-    assert sorted(set(_pairs(raw))) == deduped
-    # duplicates really are skipped (a dup pair shares many bands)
-    assert len(_pairs(raw)) > len(deduped)
-
-
-def test_simhash_dedupe_flag_same_pair_set(sig):
-    deduped = _pairs(simhash_candidate_pairs(sig, max_hamming=3))
-    raw = simhash_candidate_pairs(sig, max_hamming=3, dedupe=False)
-    assert sorted(set(_pairs(raw))) == deduped
-
-
-def test_substring_count_shared_flag_same_pair_set(sig):
-    counted = _pairs(substring_pairs_from_grams(sig))
-    raw = substring_pairs_from_grams(sig, count_shared=False)
-    assert sorted(set(_pairs(raw))) == counted
 
 
 def test_winnowing_count_shared_flag_same_pair_set(corpus):
