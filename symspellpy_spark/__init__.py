@@ -8,8 +8,9 @@ studied for *behavior* only) as idiomatic Spark DataFrame plans:
   reference symspellpy/symspellpy.py:108) becomes a ``deletes(delete_key,
   term)`` DataFrame built with pure Catalyst expressions (explode over
   deletion positions — no Python in the hot path),
-- ``lookup`` / ``lookup_compound`` / ``word_segmentation`` become batch
-  joins + window ranks + per-document ``applyInPandas`` folds,
+- ``lookup`` / ``lookup_compound`` / ``word_segmentation`` become one
+  Arrow kernel per operator, fed by a per-worker resolver or, above the
+  broadcast limit, by batch joins + window ranks,
 - the distance kernels are numpy-vectorized pandas UDFs,
 - and the whole thing powers a web-scale near-dup pipeline
   (MinHash-LSH, SimHash, suffix-array substring pass, verified pairs,

@@ -7,44 +7,41 @@ token (split-error repair, symspellpy.py:702-735), and every split
 point of the token (merge-error repair, symspellpy.py:749-832) with
 bigram / Naive-Bayes rescoring.
 
-Relational shape: ALL inner lookups are hoisted into one set-at-a-time
-``lookup_batch_relational`` over the distinct strings of the whole
-corpus (tokens + merged pairs + split halves), pre-joined back to token
-rows; the only sequential piece — the left-to-right fold whose merge decision
-depends on the previous token's decision (``is_last_combi`` /
-``suggestion_parts[-1]``) — runs per-document inside ``applyInPandas``.
-At 100 TB this means: the expensive fuzzy matching is one shared
-broadcast-join pipeline over *distinct* strings; the Python fold only
-touches each document's own pre-joined rows.
+One kernel, two resolvers: both routes run :func:`_compound_kernel` in
+one ``mapInPandas`` pass over documents. Per Arrow batch it resolves
+every token and merge pair, then the split halves of the
+out-of-vocabulary tokens, scores the split candidates with ONE batched
+distance call, and runs the reference's sequential fold
+(:func:`_fold_parts`) per document. The routes differ only in where
+the TOP answers and bigram counts come from:
+
+- worker-local (the vocabulary and the bigram table fit
+  ``BROADCAST_VOCAB_LIMIT``): the per-worker :class:`TopResolver` over
+  the dictionary's cached index broadcast, a broadcast bigram map and
+  a per-worker split cache;
+- relational (above the limit): a JVM query relation (tokens, merged
+  pairs, split halves of out-of-vocabulary tokens) goes through one
+  ``lookup_batch_relational`` TOP, the candidate split terms join the
+  bigram table when there is one, and both answers attach to each
+  document as map columns. A document's maps hold only its own
+  queries, so nothing corpus-sized is collected or broadcast.
+
+Tokenization runs JVM-side (``parse_words_expr``) on both routes: Java
+and Python regex Unicode classes differ on edge characters.
 
 Output: exactly one row per document (the reference always returns a
 single SuggestItem) plus the ``_replaced_words`` audit as a map column
 (the reference hides it in mutable state, symspellpy.py:733,837-851 —
 in Spark it must be a returned result).
-
-Routing: :func:`~symspellpy_spark.operators.neighborhood.route`, the
-rule lookup and segmentation share, plus one compound condition: the
-worker-local shape needs the bigram table to fit the broadcast limit
-too. That shape mirrors fuzzy segmentation's — the delete-neighborhood
-index is built once on the driver (operators/neighborhood.py),
-broadcast, and every inner TOP lookup resolves inside the
-``mapInPandas`` kernel with a cross-batch cache, so a document never
-leaves its partition (no token explode, no LUT joins, no groupBy
-shuffle). Tokenization stays JVM-side (``parse_words_expr``) for byte
-parity with the relational shape. Above ``BROADCAST_VOCAB_LIMIT``
-terms or bigrams the relational staged-lookup shape takes over.
 """
-
 from __future__ import annotations
 
 import re
-from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from symspellpy_spark.config import MAX_INT64, Verbosity
-from symspellpy_spark.functions.distance import distance_udf
 from symspellpy_spark.functions.text import (
     case_transfer_similar_py,
     parse_words_expr,
@@ -52,7 +49,6 @@ from symspellpy_spark.functions.text import (
 from symspellpy_spark.operators import neighborhood
 from symspellpy_spark.operators.dictionary import SparkDictionary
 from symspellpy_spark.operators.lookup import lookup_batch_relational
-from symspellpy_spark.operators.scoped_cache import persist_scoped
 
 __all__ = ["lookup_compound_batch"]
 
@@ -84,9 +80,8 @@ def _fold_parts(
     n_const: float,
     bigram_min: int,
 ) -> tuple[list, dict]:
-    """The reference's left-to-right token fold (symspellpy.py:688-851),
-    shared by the relational and worker-local routes so their
-    decisions are bit-identical.
+    """The reference's left-to-right token fold (symspellpy.py:688-851)
+    over one document, the last phase of :func:`_compound_kernel`.
 
     Each row: ``{term1, term2, sugg, combi, splits}`` where ``sugg`` /
     ``combi`` are ``(term, distance, count)`` or None (the TOP lookup of
@@ -202,279 +197,64 @@ def lookup_compound_batch(
     doc_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """-> one row per document: (doc_id, term, distance, count, replacements)."""
+    """-> one row per document: (doc_id, term, distance, count, replacements).
+
+    Routed by :func:`~symspellpy_spark.operators.neighborhood.route`,
+    like lookup and segmentation, plus one compound condition: the
+    worker-local route also needs the bigram table to fit
+    ``BROADCAST_VOCAB_LIMIT``. Both routes run one kernel (see the
+    module docstring)."""
     cfg = dictionary.config
     if max_edit_distance is None:
         max_edit_distance = cfg.max_dictionary_edit_distance
-    n_const = float(cfg.corpus_n)
-    bigram_min = dictionary.bigram_count_min
+    spark = docs.sparkSession
+    prepped = docs.select(
+        F.col(doc_col).alias("doc_id"),
+        F.col(text_col).alias("phrase"),
+        parse_words_expr(
+            F.col(text_col), split_by_space=split_by_space
+        ).alias("terms1"),
+        parse_words_expr(
+            F.col(text_col), preserve_case=True, split_by_space=split_by_space
+        ).alias("terms2"),
+    )
+    doc_id_type = dict(prepped.dtypes)["doc_id"]
 
     engine = neighborhood.route(dictionary, max_edit_distance)
+    resolvers = None
     if engine.local:
-        bigram_bc, bigrams_fit = _bigram_broadcast(docs.sparkSession, dictionary)
+        bigram_bc, bigrams_fit = _bigram_broadcast(spark, dictionary)
         if bigrams_fit:
-            return _compound_broadcast(
-                docs,
-                dictionary,
-                engine,
-                max_edit_distance,
-                ignore_non_words,
-                transfer_casing,
-                split_by_space,
-                ignore_term_with_digits,
-                doc_col,
-                text_col,
-                bigram_bc,
+            resolvers = _local_resolvers(
+                spark, dictionary, engine, max_edit_distance, bigram_bc
             )
+            # the kernel is compute-bound; pin a row-balanced
+            # partitioning when the input arrives under-partitioned
+            # (AQE coalescing would serialize it)
+            para = spark.sparkContext.defaultParallelism
+            if prepped.rdd.getNumPartitions() < para:
+                prepped = prepped.repartition(para * 2)
+    if resolvers is None:
+        prepped = _with_answer_maps(prepped, dictionary, max_edit_distance)
+        resolvers = _map_resolvers
 
-    docs = docs.select(
-        F.col(doc_col).alias("doc_id"), F.col(text_col).alias("phrase")
+    kernel = _compound_kernel(
+        resolvers,
+        engine.kernel,
+        max_edit_distance,
+        ignore_non_words,
+        ignore_term_with_digits,
+        transfer_casing,
+        float(cfg.corpus_n),
+        dictionary.bigram_count_min,
     )
-
-    toks = docs.select(
-        "doc_id",
-        "phrase",
-        F.posexplode_outer(
-            F.arrays_zip(
-                parse_words_expr(F.col("phrase"), split_by_space=split_by_space).alias(
-                    "t1"
-                ),
-                parse_words_expr(
-                    F.col("phrase"), preserve_case=True, split_by_space=split_by_space
-                ).alias("t2"),
-            )
-        ).alias("pos", "tok"),
-    ).select(
-        "doc_id",
-        "phrase",
-        "pos",
-        F.col("tok.t1").alias("term1"),
-        F.col("tok.t2").alias("term2"),
+    return prepped.mapInPandas(
+        kernel,
+        schema=(
+            f"doc_id {doc_id_type}, term string, distance int, count long, "
+            "replacements map<string,string>"
+        ),
     )
-
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    toks = toks.withColumn("prev1", F.lag("term1").over(w)).withColumn(
-        "combo", F.concat(F.col("prev1"), F.col("term1"))
-    )
-
-    # ---- one shared TOP lookup over every distinct string we need ----
-    term_strs = toks.select(F.col("term1").alias("query"))
-    combo_strs = toks.where(F.col("combo").isNotNull()).select(
-        F.col("combo").alias("query")
-    )
-    # split halves only for tokens that can enter the split branch:
-    # len > 1 AND no exact dictionary match — the fold accepts an exact
-    # match outright (reference symspellpy.py:745-748) and never reads
-    # splits for it, so in-vocabulary tokens (the overwhelming majority
-    # of web text) generate no split lookups at all
-    split_src = (
-        toks.where(F.col("term1").isNotNull() & (F.length("term1") > 1))
-        .join(
-            F.broadcast(dictionary.words.select(F.col("term").alias("term1"))),
-            "term1",
-            "left_anti",
-        )
-        .select("doc_id", "pos", "term1")
-    )
-    split_rows = split_src.select(
-        "doc_id",
-        "pos",
-        "term1",
-        F.explode(F.sequence(F.lit(1), F.length("term1") - 1)).alias("j"),
-    ).select(
-        "doc_id",
-        "pos",
-        "term1",
-        "j",
-        F.expr("substring(term1, 1, j)").alias("part1"),
-        F.expr("substring(term1, j + 1, 2147483647)").alias("part2"),
-    )
-    part_strs = split_rows.select(F.col("part1").alias("query")).unionByName(
-        split_rows.select(F.col("part2").alias("query"))
-    )
-    all_strs = term_strs.unionByName(combo_strs).unionByName(part_strs).where(
-        F.col("query").isNotNull()
-    )
-
-    lut = lookup_batch_relational(
-        all_strs,
-        dictionary,
-        Verbosity.TOP,
-        max_edit_distance=max_edit_distance,
-    ).select(
-        F.col("query"),
-        F.col("term").alias("s_term"),
-        F.col("distance").alias("s_dist"),
-        F.col("count").alias("s_count"),
-    )
-    # the lookup table feeds FOUR joins (term, combo, part1, part2);
-    # persist so the staged lookup computes once, not once per consumer.
-    # Generation-scoped (see scoped_cache.py): older generations are
-    # unpersisted on each new call, keeping executor storage flat across
-    # repeated lookup_compound_batch calls.
-    lut = persist_scoped(lut, "compound.lut")
-
-    # ---- pre-join lookups back onto token / split rows ----
-    toks = (
-        toks.join(
-            lut.select(
-                F.col("query").alias("term1"),
-                F.col("s_term").alias("sugg_term"),
-                F.col("s_dist").alias("sugg_dist"),
-                F.col("s_count").alias("sugg_count"),
-            ),
-            "term1",
-            "left",
-        )
-        .join(
-            lut.select(
-                F.col("query").alias("combo"),
-                F.col("s_term").alias("combi_term"),
-                F.col("s_dist").alias("combi_dist"),
-                F.col("s_count").alias("combi_count"),
-            ),
-            "combo",
-            "left",
-        )
-    )
-
-    splits = (
-        split_rows.join(
-            lut.select(
-                F.col("query").alias("part1"),
-                F.col("s_term").alias("p1_term"),
-                F.col("s_dist").alias("p1_dist"),
-                F.col("s_count").alias("p1_count"),
-            ),
-            "part1",
-            "inner",
-        )
-        .join(
-            lut.select(
-                F.col("query").alias("part2"),
-                F.col("s_term").alias("p2_term"),
-                F.col("s_dist").alias("p2_dist"),
-                F.col("s_count").alias("p2_count"),
-            ),
-            "part2",
-            "inner",
-        )
-        .withColumn("tmp_term", F.concat_ws(" ", F.col("p1_term"), F.col("p2_term")))
-    )
-
-    dist = distance_udf(comparer=engine.kernel, max_distance=max_edit_distance)
-    splits = splits.withColumn("tmp_dist", dist(F.col("term1"), F.col("tmp_term")))
-    if dictionary.bigrams is not None:
-        splits = splits.join(
-            F.broadcast(
-                dictionary.bigrams.select(
-                    F.col("bigram").alias("tmp_term"),
-                    F.col("count").alias("bigram_count"),
-                )
-            ),
-            "tmp_term",
-            "left",
-        )
-    else:
-        splits = splits.withColumn("bigram_count", F.lit(None).cast("long"))
-
-    split_arr = splits.groupBy("doc_id", "pos").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "j",
-                    "p1_term",
-                    "p1_count",
-                    "p2_term",
-                    "p2_count",
-                    "tmp_term",
-                    "tmp_dist",
-                    "bigram_count",
-                )
-            )
-        ).alias("splits")
-    )
-
-    full = toks.join(split_arr, ["doc_id", "pos"], "left")
-
-    # ---- per-document sequential fold ----
-    max_ed = max_edit_distance
-    pair_kernel = engine.kernel
-
-    def _pair_distance(a: str, b: str, bound: int) -> int:
-        return int(pair_kernel(pd.Series([a]), pd.Series([b]), bound).iloc[0])
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        doc_id = pdf["doc_id"].iloc[0]
-        phrase = pdf["phrase"].iloc[0]
-
-        raw = pdf.to_dict("records")
-        if len(raw) == 1 and raw[0].get("term1") is None:
-            raw = []
-        rows = []
-        for row in raw:
-            sugg = (
-                (row["sugg_term"], int(row["sugg_dist"]), float(row["sugg_count"]))
-                if not pd.isna(row["sugg_term"]) and not pd.isna(row["sugg_dist"])
-                else None
-            )
-            combi = (
-                (
-                    row["combi_term"],
-                    int(row["combi_dist"]),
-                    float(row["combi_count"]),
-                )
-                if not pd.isna(row["combi_term"]) and not pd.isna(row["combi_dist"])
-                else None
-            )
-            s_list = row.get("splits")
-            if s_list is None or not hasattr(s_list, "__len__"):
-                s_list = []
-            rows.append(
-                {
-                    "term1": row["term1"],
-                    "term2": row["term2"],
-                    "sugg": sugg,
-                    "combi": combi,
-                    "splits": [
-                        dict(s) if not isinstance(s, dict) else s for s in s_list
-                    ],
-                }
-            )
-        parts, replaced = _fold_parts(
-            rows,
-            ignore_non_words,
-            ignore_term_with_digits,
-            max_ed,
-            n_const,
-            bigram_min,
-        )
-
-        joined_term = " ".join(p[0] for p in parts)
-        joined_count = n_const
-        for p in parts:
-            joined_count *= p[2] / n_const
-        if transfer_casing:
-            joined_term = case_transfer_similar_py(phrase, joined_term)
-        distance = _pair_distance(phrase, joined_term, 2**31 - 1)
-        count = min(int(joined_count), MAX_INT64)
-        return pd.DataFrame(
-            {
-                "doc_id": [doc_id],
-                "term": [joined_term],
-                "distance": [distance],
-                "count": [count],
-                "replacements": [replaced],
-            }
-        )
-
-    doc_id_type = dict(docs.dtypes)["doc_id"]
-    out_schema = (
-        f"doc_id {doc_id_type}, term string, distance int, count long, "
-        "replacements map<string,string>"
-    )
-    return full.groupBy("doc_id").applyInPandas(fold, schema=out_schema)
 
 
 # driver-side broadcast reuse for the bigram map: one broadcast per
@@ -488,7 +268,7 @@ def _bigram_broadcast(spark, dictionary: SparkDictionary):
 
     ``fits=False`` means the bigram table exceeds
     ``BROADCAST_VOCAB_LIMIT`` rows and the caller must use the
-    relational shape (joins against the distributed bigram table)
+    relational route (a join against the distributed bigram table)
     instead of a broadcast dict. The size probe is
     ``limit(n+1).collect()`` — when it returns <= n rows that IS the
     whole table, so no separate count job runs.
@@ -528,80 +308,169 @@ _WORKER_SPLIT_STATE: dict = {}
 _SPLIT_CACHE_CAP = 1_000_000
 
 
-def _compound_broadcast(
-    docs: DataFrame,
+def _no_prepare(queries) -> None:
+    pass
+
+
+def _local_resolvers(
+    spark,
     dictionary: SparkDictionary,
     engine: neighborhood.Route,
     max_edit_distance: int,
-    ignore_non_words: bool,
-    transfer_casing: bool,
-    split_by_space: bool,
-    ignore_term_with_digits: bool,
-    doc_col: str,
-    text_col: str,
     bigram_bc,
-) -> DataFrame:
-    """Worker-local ``lookup_compound`` kernel.
-
-    Same results as the relational shape (both run :func:`_fold_parts`;
-    equivalence-tested on merge/split/bigram corpora), different plan:
-    ONE ``mapInPandas`` pass over documents — no token explode, no
-    shared-LUT joins, no per-document ``groupBy`` shuffle. Inner TOP
-    lookups (tokens, merge combos, split halves — reference
-    symspellpy.py:690-790) resolve against the broadcast delete index
-    via the shared :class:`TopResolver`, vectorized per Arrow batch and
-    cached across batches; split candidates additionally cache per
-    distinct token, and their ``tmp_term`` distances
-    (symspellpy.py:791-800) run as one batched kernel call.
-
-    Tokenization runs JVM-side (``parse_words_expr``) and ships token
-    arrays into the kernel, so token boundaries are byte-identical to
-    the relational path's (Java and Python regex Unicode classes differ
-    on edge characters).
-    """
-    cfg = dictionary.config
-    kernel = engine.kernel
-    n_const = float(cfg.corpus_n)
-    bigram_min = dictionary.bigram_count_min
-    spark = docs.sparkSession
-
+):
+    """The worker-local route's ``resolvers`` (see
+    :func:`_compound_kernel`): the shared per-worker
+    :class:`TopResolver` over the dictionary's cached index broadcast,
+    the broadcast bigram map, and the per-worker split cache."""
     idx_bc, key = neighborhood.fuzzy_index_broadcast(
-        spark, dictionary, max_edit_distance, cfg.prefix_length
+        spark, dictionary, max_edit_distance, dictionary.config.prefix_length
     )
 
-    prepped = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        F.col(text_col).alias("phrase"),
-        parse_words_expr(
-            F.col(text_col), split_by_space=split_by_space
-        ).alias("terms1"),
-        parse_words_expr(
-            F.col(text_col), preserve_case=True, split_by_space=split_by_space
-        ).alias("terms2"),
-    )
-    doc_id_type = dict(prepped.dtypes)["doc_id"]
-    out_schema = (
-        f"doc_id {doc_id_type}, term string, distance int, count long, "
-        "replacements map<string,string>"
-    )
-    inw = ignore_non_words
-    itwd = ignore_term_with_digits
-    tc = transfer_casing
-    max_ed = max_edit_distance
-
-    def run(batches):
+    def resolvers():
         resolver = neighborhood.worker_resolver(
-            idx_bc, key, kernel, engine.transpositions
+            idx_bc, key, engine.kernel, engine.transpositions
         )
-        words = resolver.words
         split_cache = _WORKER_SPLIT_STATE.get(key)
         if split_cache is None:
             split_cache = {}
             _WORKER_SPLIT_STATE.clear()  # one index build per worker
             _WORKER_SPLIT_STATE[key] = split_cache
-        bigram_map = bigram_bc.value if bigram_bc is not None else {}
+        bigram_get = (bigram_bc.value if bigram_bc is not None else {}).get
+        answers = (resolver.prepare, resolver.get, bigram_get)
+        return split_cache, lambda pdf: answers
 
+    return resolvers
+
+
+def _with_answer_maps(
+    prepped: DataFrame, dictionary: SparkDictionary, max_edit_distance: int
+) -> DataFrame:
+    """The relational route's input: ``prepped`` plus, per phrase, a
+    ``top`` map (query -> its TOP answer) over the phrase's tokens,
+    merged pairs and the split halves of its out-of-vocabulary tokens
+    longer than one character, and a ``bigrams`` map (split candidate
+    -> bigram count) of the candidates found in ``dictionary.bigrams``.
+
+    Exact-match tokens never read their splits (symspellpy.py:745-748),
+    so in-vocabulary tokens, the bulk of real text, generate no split
+    lookups. No join here carries a broadcast hint: this route runs
+    exactly when a table is too large to broadcast."""
+    t1 = F.col("terms1")
+    n = F.size(t1)
+    tokens = prepped.select("phrase", F.explode(t1).alias("query"))
+    pairs = prepped.select(
+        "phrase",
+        F.explode(
+            F.zip_with(
+                F.slice(t1, 1, F.greatest(n - 1, F.lit(0))),
+                F.slice(t1, 2, n),
+                lambda a, b: F.concat(a, b),
+            )
+        ).alias("query"),
+    )
+    oov = tokens.where(F.length("query") > 1).join(
+        dictionary.words.select(F.col("term").alias("query")), "query", "left_anti"
+    )
+    splits = oov.select(
+        "phrase",
+        "query",
+        F.explode(F.sequence(F.lit(1), F.length("query") - 1)).alias("j"),
+    ).select(
+        "phrase",
+        F.expr("substring(query, 1, j)").alias("part1"),
+        F.expr("substring(query, j + 1)").alias("part2"),
+    )
+    queries = (
+        tokens.unionByName(pairs)
+        .unionByName(splits.select("phrase", F.col("part1").alias("query")))
+        .unionByName(splits.select("phrase", F.col("part2").alias("query")))
+    )
+    lut = lookup_batch_relational(
+        queries, dictionary, Verbosity.TOP, max_edit_distance=max_edit_distance
+    ).select("query", F.struct("term", "distance", "count").alias("answer"))
+    entries = queries.join(lut, "query").select(
+        "phrase", F.struct("query", "answer").alias("top")
+    )
+    if dictionary.bigrams is not None:
+
+        def half(col):
+            return lut.select(
+                F.col("query").alias(col), F.col("answer.term").alias(col + "_term")
+            )
+
+        candidates = (
+            splits.join(half("part1"), "part1")
+            .join(half("part2"), "part2")
+            .select(
+                "phrase",
+                F.concat_ws(" ", "part1_term", "part2_term").alias("bigram"),
+            )
+        )
+        found = candidates.join(
+            dictionary.bigrams.select("bigram", "count"), "bigram"
+        ).select("phrase", F.struct("bigram", "count").alias("bigram"))
+        entries = entries.unionByName(found, allowMissingColumns=True)
+    else:
+        entries = entries.withColumn(
+            "bigram", F.lit(None).cast("struct<bigram:string,count:long>")
+        )
+    answers = entries.groupBy("phrase").agg(
+        F.map_from_entries(F.collect_set("top")).alias("top"),
+        F.map_from_entries(F.collect_set("bigram")).alias("bigrams"),
+    )
+    return prepped.join(answers, "phrase", "left")
+
+
+def _map_resolvers():
+    """The relational route's ``resolvers`` (see
+    :func:`_compound_kernel`): each batch answers from its documents'
+    ``top`` and ``bigrams`` maps; the split cache lives for one task."""
+
+    def answers(pdf):
+        top = neighborhood.merged_answers(pdf["top"])
+        bigrams: dict = {}
+        for m in pdf["bigrams"]:
+            if m:
+                bigrams.update(m)
+        return _no_prepare, top.get, bigrams.get
+
+    return {}, answers
+
+
+def _compound_kernel(
+    resolvers,
+    kernel,
+    max_ed: int,
+    inw: bool,
+    itwd: bool,
+    tc: bool,
+    n_const: float,
+    bigram_min: int,
+):
+    """-> the ``mapInPandas`` function of both routes over
+    ``(doc_id, phrase, terms1, terms2, ...)`` rows.
+
+    ``resolvers()`` runs once per task and returns ``(split_cache,
+    answers)``; ``answers(pdf)`` returns the batch's ``(prepare, get,
+    bigram_get)``: ``prepare(queries)`` readies the TOP answers of a
+    query set, ``get(q)`` returns ``(term, distance, count)`` or None,
+    ``bigram_get(tmp_term)`` a bigram count or None. A token is in the
+    vocabulary when its TOP answer has distance 0. ``split_cache`` maps
+    an out-of-vocabulary token to its split candidates
+    (symspellpy.py:749-800); their ``tmp_term`` distances run as one
+    batched ``kernel`` call per batch, as does the final whole-phrase
+    distance (symspellpy.py:855-858)."""
+
+    def run(batches):
+        split_cache, answers = resolvers()
         for pdf in batches:
+            prepare, get, bigram_get = answers(pdf)
+
+            def oov(t):
+                r = get(t)
+                return r is None or r[1] != 0
+
             doc_rows = list(
                 zip(pdf["doc_id"], pdf["phrase"], pdf["terms1"], pdf["terms2"])
             )
@@ -616,7 +485,7 @@ def _compound_broadcast(
                     if prev is not None:
                         todo.add(prev + t)
                     prev = t
-            resolver.prepare(todo)
+            prepare(todo)
             # phase B: split halves for OOV len>1 tokens not yet cached
             # (exact-match tokens never read splits: symspellpy.py:745-748).
             # Cap-clear BEFORE need_split is computed: clearing later
@@ -629,21 +498,21 @@ def _compound_broadcast(
                 if t1 is None:
                     continue
                 for t in t1:
-                    if len(t) > 1 and t not in words and t not in split_cache:
+                    if len(t) > 1 and t not in split_cache and oov(t):
                         need_split.add(t)
             part_todo = set()
             for t in need_split:
                 for j in range(1, len(t)):
                     part_todo.add(t[:j])
                     part_todo.add(t[j:])
-            resolver.prepare(part_todo)
+            prepare(part_todo)
             # phase C: split candidate lists; ONE kernel call for every
             # (token, tmp_term) distance of the batch
             cand = []
             for t in sorted(need_split):
                 for j in range(1, len(t)):
-                    r1 = resolver.get(t[:j])
-                    r2 = resolver.get(t[j:])
+                    r1 = get(t[:j])
+                    r2 = get(t[j:])
                     if r1 is None or r2 is None:
                         continue
                     cand.append((t, r1, r2, r1[0] + " " + r2[0]))
@@ -664,7 +533,7 @@ def _compound_broadcast(
                         "p2_count": r2[2],
                         "tmp_term": tmp,
                         "tmp_dist": int(tmp_dists[k]),
-                        "bigram_count": bigram_map.get(tmp),
+                        "bigram_count": bigram_get(tmp),
                     }
                 )
             # phase D: the sequential per-document fold
@@ -677,29 +546,21 @@ def _compound_broadcast(
                 rows = []
                 if t1 is not None and len(t1) > 0:
                     # iterate the LOWERCASE tokenization only, like the
-                    # reference (symspellpy.py:688: enumerate(terms_1))
-                    # and the relational path (posexplode of terms1);
+                    # reference (symspellpy.py:688: enumerate(terms_1));
                     # terms2 is indexed defensively — case-folding can in
                     # principle change codepoint runs
                     n2 = len(t2) if t2 is not None else 0
                     prev = None
                     for i, term1 in enumerate(t1):
                         term2 = t2[i] if i < n2 else None
-                        sugg = resolver.get(term1)
+                        sugg = get(term1)
                         if sugg is not None:
                             sugg = (sugg[0], sugg[1], float(sugg[2]))
-                        combi = (
-                            resolver.get(prev + term1)
-                            if prev is not None
-                            else None
-                        )
+                        combi = get(prev + term1) if prev is not None else None
                         if combi is not None:
                             combi = (combi[0], combi[1], float(combi[2]))
-                        splits = (
-                            split_cache.get(term1, ())
-                            if len(term1) > 1 and term1 not in words
-                            else ()
-                        )
+                        # only out-of-vocabulary tokens have a split list
+                        splits = split_cache.get(term1, ())
                         rows.append(
                             {
                                 "term1": term1,
@@ -743,10 +604,4 @@ def _compound_broadcast(
                 }
             )
 
-    # the kernel is compute-bound; pin a row-balanced partitioning when
-    # the input arrives under-partitioned (same guard as segmentation's
-    # _run_doc_local_dp — AQE coalescing would serialize it)
-    para = spark.sparkContext.defaultParallelism
-    if prepped.rdd.getNumPartitions() < para:
-        prepped = prepped.repartition(para * 2)
-    return prepped.mapInPandas(run, schema=out_schema)
+    return run

@@ -30,7 +30,7 @@ routing rule compound and segmentation share:
   the vocabulary: ~8 s at 80k terms, ~39 s at 500k), paid once per
   dictionary and shared with compound and segmentation;
 - relational (:func:`lookup_batch_relational`): the delete-key join
-  below, for vocabularies too big to broadcast. The relational shapes
+  below, for vocabularies too big to broadcast. The relational routes
   of compound and segmentation call it directly.
 
 Relational plan shape (scale notes):

@@ -764,6 +764,20 @@ def worker_resolver(idx_bc, key: tuple, kernel, transpositions: bool,
     return resolver
 
 
+def merged_answers(maps) -> dict:
+    """One Arrow batch's per-document TOP answer maps (``query ->
+    {term, distance, count}``, the map column a relational route joins
+    back to its documents) merged into one ``query -> (term, distance,
+    count)`` dict, the relational stand-in for :meth:`TopResolver.get`.
+    An answer depends only on its query, so documents never disagree."""
+    out: dict = {}
+    for m in maps:
+        if m:
+            for q, a in m.items():
+                out[q] = (a["term"], a["distance"], a["count"])
+    return out
+
+
 def cached_driver_value(cache: dict, owner, extra_key: tuple, build):
     """Driver-side once-per-owner cache shared by every broadcast-reuse
     site (the fuzzy index here, ``compound``'s bigram map): ->

@@ -159,8 +159,9 @@ def test_empty_and_trivial_docs(spark):
 
 
 def test_repeated_compound_no_cache_accretion(spark, en_dict_uni, relational_route):
-    """The RELATIONAL path's shared LUT is generation-scoped: repeated
-    calls must not grow the CacheManager unboundedly. (Pinned to the
+    """The RELATIONAL route's persists (the nested lookup_batch.near)
+    are generation-scoped: repeated calls must not grow the
+    CacheManager unboundedly. (Pinned to the
     relational route: this vocab otherwise routes to the worker-local
     kernel, which persists nothing — the behavior under test would
     silently stop executing.)"""
@@ -178,9 +179,8 @@ def test_repeated_compound_no_cache_accretion(spark, en_dict_uni, relational_rou
                 docs, en_dict_uni, max_edit_distance=2
             ).collect()
         mid = cache_mgr.cachedData().size()
-        # each call may keep `keep` generations per scope (compound.lut
-        # and the nested lookup_batch.near), but the count must not grow
-        # per call
+        # each call may keep `keep` generations per scope (the nested
+        # lookup_batch.near), but the count must not grow per call
         for _ in range(3):
             lookup_compound_batch(
                 docs, en_dict_uni, max_edit_distance=2
@@ -190,9 +190,10 @@ def test_repeated_compound_no_cache_accretion(spark, en_dict_uni, relational_rou
 
 
 def test_strategies_agree(spark, en_dict_bi, relational_route):
-    """The worker-local kernel (default) and the relational staged-lookup
-    path must be bit-identical — merge repairs, split repairs with and
-    without bigram boost, unknown tokens, numbers/acronyms, casing."""
+    """The worker-local route (default) and the relational route (the
+    same kernel on joined-back answer maps) must be bit-identical —
+    merge repairs, split repairs with and without bigram boost, unknown
+    tokens, numbers/acronyms, casing."""
     texts = [
         "whereis th elove hehad dated forImuch of thepast who "
         "couqdn'tread in sixtgrade and ins pired him",

@@ -6,7 +6,6 @@ oracle is itself pinned by a plain-Python replay of the reference fold."""
 import math
 import os
 import re
-import sys
 from collections import Counter
 
 import duckdb
@@ -14,6 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entry_mod
+import oracles
 from symspellpy_spark.config import DEFAULT_CORPUS_N as N
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -131,96 +131,12 @@ MAX_ED = 2
 TOKEN = re.compile(entry_mod.TOKEN_RE)
 
 
-def _levenshtein(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-def _top(vocab: Counter, q: str):
-    """Verbosity.TOP: the closest term, then the most frequent, then
-    the smallest; ``(term, distance, count)`` or None."""
-    cands = [
-        (d, -c, t)
-        for t, c in vocab.items()
-        if abs(len(t) - len(q)) <= MAX_ED and (d := _levenshtein(q, t)) <= MAX_ED
-    ]
-    if not cands:
-        return None
-    d, neg_c, t = min(cands)
-    return t, d, -neg_c
-
-
-def _unknown(term: str):
-    return term, MAX_ED + 1, 10 // 10 ** len(term)
-
-
-def _lookup_compound(vocab: Counter, phrase: str):
-    """symspellpy.py:688-865 with no bigram table: merge check, split
-    scan with Naive-Bayes counts, unknown fallbacks, joined count."""
-    terms = TOKEN.findall(phrase)
-    parts = []
-    is_last_combi = False
-    for i, term in enumerate(terms):
-        sugg = _top(vocab, term)
-        if i > 0 and not is_last_combi:
-            combi = _top(vocab, terms[i - 1] + term)
-            if combi is not None:
-                best_1 = parts[-1]
-                best_2 = sugg if sugg is not None else _unknown(term)
-                distance_1 = best_1[1] + best_2[1]
-                if distance_1 >= 0 and (
-                    combi[1] + 1 < distance_1
-                    or (
-                        combi[1] + 1 == distance_1
-                        and combi[2] > best_1[2] / N * best_2[2]
-                    )
-                ):
-                    parts[-1] = (combi[0], combi[1] + 1, combi[2])
-                    is_last_combi = True
-                    continue
-        is_last_combi = False
-        if sugg is not None and (sugg[1] == 0 or len(term) == 1):
-            parts.append(sugg)
-            continue
-        if len(term) == 1:
-            parts.append(_unknown(term))
-            continue
-        split_best = sugg
-        for j in range(1, len(term)):
-            s1 = _top(vocab, term[:j])
-            s2 = _top(vocab, term[j:]) if s1 is not None else None
-            if s2 is None:
-                continue
-            tmp_term = s1[0] + " " + s2[0]
-            tmp_dist = _levenshtein(term, tmp_term)
-            if tmp_dist > MAX_ED:
-                tmp_dist = MAX_ED + 1
-            if split_best is not None:
-                if tmp_dist > split_best[1]:
-                    continue
-                if tmp_dist < split_best[1]:
-                    split_best = None
-            tmp_count = min(sys.maxsize, int(s1[2] / N * s2[2]))
-            if split_best is None or tmp_count > split_best[2]:
-                split_best = (tmp_term, tmp_dist, tmp_count)
-        parts.append(split_best if split_best is not None else _unknown(term))
-    joined = " ".join(p[0] for p in parts)
-    count = N
-    for p in parts:
-        count *= p[2] / N
-    return joined, _levenshtein(phrase, joined), int(count)
-
-
 def _replay_rows():
     docs = pq.read_table(
         f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"]
     ).to_pylist()
     vocab = Counter(t for d in docs for t in TOKEN.findall(d["text"].lower()))
+    top = oracles.BruteTop(vocab, MAX_ED)
     rows = []
     for d in docs:
         ts = TOKEN.findall(d["text"].lower())
@@ -228,7 +144,10 @@ def _replay_rows():
         if d["doc_id"] >= 50 or len(ts) < 8 or len(ts[2]) < 5:
             continue
         phrase = " ".join([ts[0] + ts[1], ts[2][:2], ts[2][2:], *ts[3:8]])
-        rows.append((d["doc_id"], *_lookup_compound(vocab, phrase)))
+        term, dist, count, _ = oracles.lookup_compound(
+            phrase, top, N, MAX_ED, token_re=entry_mod.TOKEN_RE
+        )
+        rows.append((d["doc_id"], term, dist, count))
     return sorted(rows)
 
 

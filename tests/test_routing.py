@@ -1,9 +1,10 @@
 """The one routing rule (``neighborhood.route``) of lookup, compound and
 segmentation: the worker-local and relational routes agree row for row
-on an in-repo syllable dictionary, both routes share one cached index
-and per-worker resolver, the relational route leaves the join to AQE
-above the broadcast limit, and USER_PROVIDED distance answers only at
-d = 0."""
+on an in-repo syllable dictionary, and both agree with plain-Python
+transcriptions of the reference (``tests/oracles.py``); both routes
+share one cached index and per-worker resolver, the relational route
+leaves the joins to AQE above the broadcast limit, and USER_PROVIDED
+distance answers only at d = 0."""
 
 from __future__ import annotations
 
@@ -12,7 +13,8 @@ import contextlib
 import numpy as np
 import pytest
 
-from perfbench import inputs
+import oracles
+from perfbench import checks, inputs
 from symspellpy_spark.config import DistanceAlgorithm, EngineConfig, Verbosity
 from symspellpy_spark.functions.distance import damerau_osa_batch
 from symspellpy_spark.operators import neighborhood
@@ -33,6 +35,14 @@ def _physical(df) -> str:
 
 def _rows(df) -> list:
     return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _compound_rows(df) -> list:
+    return sorted(
+        (r["doc_id"], r["term"], r["distance"], r["count"],
+         sorted(r["replacements"].items()))
+        for r in df.collect()
+    )
 
 
 @pytest.fixture(scope="module")
@@ -63,8 +73,9 @@ def _noisy(words, r, p_typo=0.3):
 @pytest.fixture(scope="module")
 def glued_docs(spark, syllables):
     """Typo'd dictionary words glued three to a doc, plus docs that take
-    the DP's general path (spaces, capitals, non-ASCII) and digit runs
-    for ``ignore_pattern``."""
+    the DP's general path (spaces, capitals, non-ASCII, and U+001C /
+    U+001F, which Python's ``\\s`` counts as whitespace and Java's does
+    not) and digit runs for ``ignore_pattern``."""
     r = np.random.default_rng((SEED, 1))
     words = _noisy(_draw(syllables, r, 72), r)
     texts = ["".join(words[i : i + 3]) for i in range(0, len(words), 3)]
@@ -73,6 +84,8 @@ def glued_docs(spark, syllables):
         words[3].capitalize() + words[4] + "24th" + words[5],
         words[6] + "é" + words[7],
         "42" + words[8] + "7x",
+        "hello\x1cworld",
+        "steam\x1fspark",
     ]
     return spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
@@ -82,7 +95,8 @@ def glued_docs(spark, syllables):
 @pytest.fixture(scope="module")
 def compound_case(spark, syllables, syl_dict):
     """Typo'd sentences with merge errors (two words glued) and split
-    errors (a word cut in two), and a bigram table over the clean
+    errors (a word cut in two), one with capitals, digits and an
+    acronym for the option sets, and a bigram table over the clean
     sentences' adjacent pairs."""
     r = np.random.default_rng((SEED, 2))
     clean = _draw(syllables, r, 150)
@@ -95,6 +109,9 @@ def compound_case(spark, syllables, syl_dict):
         elif k % 3 == 1 and len(toks[0]) > 3:
             toks[0:1] = [toks[0][:2], toks[0][2:]]
         texts.append(" ".join(toks))
+    texts.append(
+        f"{clean[0].capitalize()} 24th {clean[1]}{clean[2]} NATO 123 {clean[3]}"
+    )
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"
     )
@@ -127,22 +144,28 @@ def test_segmentation_routes_agree(
     assert got == _rows(rel)
 
 
-@pytest.mark.parametrize("with_bigrams", [False, True])
+_OPTIONS = {
+    "": {},
+    "-non_words": {"ignore_non_words": True, "ignore_term_with_digits": True},
+    "-casing": {"transfer_casing": True},
+}
+
+
+@pytest.mark.parametrize(
+    "with_bigrams, options",
+    [(b, o) for o in _OPTIONS.values() for b in (False, True)],
+    ids=[f"{b}{k}" for k in _OPTIONS for b in (False, True)],
+)
 @pytest.mark.parametrize("d", [1, 2])
 def test_compound_routes_agree(
-    spark, syl_dict, compound_case, relational_route, d, with_bigrams
+    spark, syl_dict, compound_case, relational_route, d, with_bigrams, options
 ):
     docs, bi_dict = compound_case
     dictionary = bi_dict if with_bigrams else syl_dict
 
     def compound():
-        return lookup_compound_batch(docs, dictionary, max_edit_distance=d)
-
-    def rows(df):
-        return sorted(
-            (r["doc_id"], r["term"], r["distance"], r["count"],
-             sorted(r["replacements"].items()))
-            for r in df.collect()
+        return lookup_compound_batch(
+            docs, dictionary, max_edit_distance=d, **options
         )
 
     local = compound()
@@ -150,10 +173,125 @@ def test_compound_routes_agree(
     with relational_route():
         rel = compound()
     assert "Join" in _physical(rel)
-    got = rows(local)
+    got = _compound_rows(local)
     assert len(got) == docs.count()
     assert any(dict(r[4]) for r in got)  # some token was repaired
-    assert got == rows(rel)
+    assert got == _compound_rows(rel)
+
+
+@pytest.fixture(scope="module")
+def brute_top(syllables):
+    """OSA TOP lookups by brute force, one scanner per distance."""
+    return {d: checks.BruteForceTop(syllables, d) for d in (0, 1, 2)}
+
+
+@pytest.mark.parametrize("ignore", [None, r"\d+\w*"])
+@pytest.mark.parametrize("d", [0, 1, 2])
+def test_segmentation_matches_the_reference_dp(
+    spark, syl_dict, glued_docs, brute_top, relational_route, d, ignore
+):
+    """Both routes return the rows of a plain-Python transcription of
+    the reference DP over a brute-force TOP lookup (the log-probability
+    sums up to float rounding: the reference scores an unknown part as
+    ``log10(10 / N / 10**len)``, the engine as ``1 - log10(N) - len``)."""
+    top = brute_top[d].top
+    n = float(syl_dict.config.corpus_n)
+    want = sorted(
+        (doc_id, *oracles.word_segmentation(
+            text, top, n, syl_dict.max_length, ignore
+        ))
+        for doc_id, text in glued_docs.collect()
+    )
+
+    def seg():
+        return word_segmentation_batch(
+            glued_docs, syl_dict, max_edit_distance=d, ignore_pattern=ignore
+        )
+
+    local = seg()
+    with relational_route():
+        rel = seg()
+    for got in (sorted(map(tuple, local.collect())),
+                sorted(map(tuple, rel.collect()))):
+        assert [g[:4] for g in got] == [w[:4] for w in want]
+        assert all(
+            np.isclose(g[4], w[4], rtol=1e-12, atol=0)
+            for g, w in zip(got, want)
+        )
+
+
+@pytest.fixture(scope="module")
+def lev_dict(spark, syllables):
+    """The syllable dictionary under Levenshtein distance, with a corpus
+    size small enough that a joined compound count stays above 0."""
+    cfg = EngineConfig(
+        distance_algorithm=DistanceAlgorithm.LEVENSHTEIN, corpus_n=10**7
+    )
+    return SparkDictionary.from_words(
+        spark, spark.createDataFrame(syllables), config=cfg
+    ).cache()
+
+
+@pytest.mark.parametrize("with_bigrams", [False, True])
+@pytest.mark.parametrize("d", [1, 2])
+def test_compound_matches_the_reference_replay(
+    spark, syllables, lev_dict, compound_case, relational_route, d,
+    with_bigrams
+):
+    """Both routes return the rows of a plain-Python replay of the
+    reference fold over a brute-force Levenshtein TOP lookup,
+    replacements and the count chain included."""
+    docs, bi_dict = compound_case
+    dictionary, bigrams = lev_dict, None
+    if with_bigrams:
+        dictionary = lev_dict.with_bigrams(bi_dict.bigrams)
+        bigrams = dict(map(tuple, bi_dict.bigrams.collect()))
+    top = oracles.BruteTop(dict(zip(syllables["term"], syllables["count"])), d)
+    want = []
+    for doc_id, text in docs.collect():
+        term, dist, count, replaced = oracles.lookup_compound(
+            text, top, 10**7, d, bigrams=bigrams
+        )
+        want.append((doc_id, term, dist, count, sorted(replaced.items())))
+    want.sort()
+    assert any(w[3] > 0 for w in want)  # the count chain carries a value
+
+    def compound():
+        return lookup_compound_batch(docs, dictionary, max_edit_distance=d)
+
+    local = compound()
+    with relational_route():
+        rel = compound()
+    assert _compound_rows(local) == want
+    assert _compound_rows(rel) == want
+
+
+_EDGE_BATCHES = {
+    "mixed": [(0, ""), (1, None), (2, "steam spark")],
+    "all_null": [(0, None), (1, None)],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("batch", sorted(_EDGE_BATCHES))
+@pytest.mark.parametrize("operator", ["compound", "segmentation"])
+def test_edge_batches_agree(spark, syl_dict, relational_route, operator, batch):
+    """Empty texts, null texts, an all-null batch and an empty DataFrame:
+    one row per document on both routes, and the same rows."""
+    docs = spark.createDataFrame(
+        _EDGE_BATCHES[batch], "doc_id long, text string"
+    )
+
+    def call():
+        if operator == "compound":
+            return lookup_compound_batch(docs, syl_dict, max_edit_distance=1)
+        return word_segmentation_batch(docs, syl_dict, max_edit_distance=1)
+
+    local = _rows(call())
+    with relational_route():
+        rel = _rows(call())
+    assert len(local) == len(_EDGE_BATCHES[batch])
+    assert local == rel
 
 
 def test_user_provided_distance_answers_only_at_d0(spark, relational_route):
@@ -297,5 +435,35 @@ def test_lookup_above_the_limit_leaves_the_join_to_aqe(
         assert "MapInPandas" not in plan
         assert "BroadcastHashJoin" not in plan, plan
         assert _rows(routed) == local
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_compound_above_the_limit_leaves_the_joins_to_aqe(
+    spark, compound_case, monkeypatch
+):
+    """Above ``BROADCAST_VOCAB_LIMIT`` lookup_compound_batch with a
+    bigram table takes the relational route with no broadcast hint on
+    any join: the vocabulary and the bigrams are the tables that sent
+    it there. The size-based auto-broadcast is switched off, so only a
+    hint could plan a BroadcastHashJoin. Its rows equal the worker-local
+    route's."""
+    docs, bi_dict = compound_case
+    local = _compound_rows(
+        lookup_compound_batch(docs, bi_dict, max_edit_distance=1)
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(
+                neighborhood, "BROADCAST_VOCAB_LIMIT", bi_dict.num_terms - 1
+            )
+            routed = lookup_compound_batch(docs, bi_dict, max_edit_distance=1)
+        plan = _physical(routed)
+        assert "Join" in plan
+        assert "BroadcastHashJoin" not in plan, plan
+        assert _compound_rows(routed) == local
     finally:
         spark.conf.set(key, old)
